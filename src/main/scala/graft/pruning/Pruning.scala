@@ -80,29 +80,43 @@ object Pruning {
   * same dataFilters path (and invalidates the cached name, since the
   * view then no longer means "the whole table").
   *
-  * Concurrency: NO lock anywhere on the query path. A RANGED or
-  * db-scoped request gets its own child session (`spark.newSession()`:
-  * same SparkContext, shared cache, private temp-view catalog + conf).
-  * Unranged default-scoped requests — the common path — plan against an
-  * immutable PUBLISHED SNAPSHOT: a child session whose views were all
-  * registered while the catalog's version vector was observed unchanged
-  * (build reads the vector, registers, re-reads; a mismatch rebuilds),
-  * then published via an AtomicReference. A published session's views
-  * are never mutated afterwards, so any number of requests can analyze
-  * on it concurrently, and a manifest-version bump simply makes the
-  * next request build + publish a successor — readers never wait on a
+  * Concurrency: NO lock anywhere on the query path. Unranged requests —
+  * the common path, `?db=`-scoped or not — plan against an immutable
+  * PUBLISHED SNAPSHOT of their scope: a child session (same
+  * SparkContext, shared cache, private temp-view catalog + conf) whose
+  * views were all registered while the catalog's version vector was
+  * observed unchanged (build reads the vector, registers, re-reads; a
+  * mismatch rebuilds). There is one published snapshot per scope, keyed
+  * by the bare db (`default` is one key like any other); a scope's
+  * session binds every table's flat `db_table` name plus the bare names
+  * of its own db. A published session's views are never mutated
+  * afterwards, so any number of requests can analyze on it
+  * concurrently, and a version bump simply makes the next request of
+  * each scope build + publish a successor — readers never wait on a
   * monitor (the r4 shape serialized every unranged default-db request
-  * through `synchronized{register; analyze}`).
+  * through `synchronized{register; analyze}`). Only dbs present in the
+  * catalog get a snapshot, and a scope whose db left the catalog is
+  * dropped when next seen, so the map stays bounded by the catalog.
+  *
+  * Exceptions, each planned on a private child session built for the
+  * one request: a RANGED request (its views are range-filtered), one
+  * carrying rewrite confs (`extraConfs`), one scoped to a db the
+  * catalog does not hold, and any COMMAND statement (SET/RESET,
+  * CREATE/DROP TEMP VIEW, CACHE, USE, ...) — run on a shared snapshot,
+  * a command would leak its view or conf into every later request.
   */
 final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
+  import QueryViews.{Snapshot, Versions}
   private val registered = scala.collection.mutable.Map.empty[(String, String), Long]
 
-  /** An internally consistent planning snapshot: all views registered
-    * at one catalog version vector. */
-  private final case class Snapshot(versions: Map[(String, String), Long],
-                                    session: SparkSession)
   private val published =
-    new java.util.concurrent.atomic.AtomicReference[Snapshot]
+    new java.util.concurrent.ConcurrentHashMap[String, Snapshot]
+
+  /** Scopes that currently hold a published snapshot. */
+  private[pruning] def publishedScopes: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    published.keySet.asScala.toSet
+  }
 
   // ---- published pipeline artifacts on the SQL surface ----
   // The dedup/ANN artifacts (cluster map, IVF index) are parquet tables
@@ -121,7 +135,7 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
   private val artifactVersion = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Publish a parquet artifact as view `name` for all future queries.
-    * Bumps the snapshot version so the published planning session is
+    * Bumps the artifact version so every scope's published snapshot is
     * rebuilt (same invalidation path as a table write). */
   def publishArtifactView(name: String, parquetPath: String): Unit = {
     artifactViews.put(name, parquetPath)
@@ -159,28 +173,26 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
     ok
   }
 
-  private def versionVector(): Map[(String, String), Long] =
-    catalog.all().map(s => (s.database, s.name) ->
-      catalog.version(s.database, s.name)).toMap +
-      (("__graft_artifacts", "") -> artifactVersion.get())
+  private def versionVector(): Versions =
+    Versions(catalog.all().map(s => (s.database, s.name) ->
+      catalog.version(s.database, s.name)).toMap, artifactVersion.get())
 
-  /** Current consistent snapshot, building + publishing one if the
-    * published snapshot is missing or stale. The build loop retries
-    * while a concurrent write moves the version vector mid-build
-    * (bounded: under sustained write pressure the last build is used
-    * for THIS request — the same tear-vs-writers exposure the
-    * monitor-based path had, since the monitor never excluded
+  /** Scope `bare`'s current consistent snapshot, building + publishing
+    * one if its published snapshot is missing or stale at `v`. The
+    * build loop retries while a concurrent write moves the version
+    * vector mid-build (bounded: under sustained write pressure the last
+    * build is used for THIS request — the same tear-vs-writers exposure
+    * the monitor-based path had, since the monitor never excluded
     * writers, only other readers). */
-  private def snapshotSession(): SparkSession = {
-    val v = versionVector()
-    val cur = published.get()
+  private def snapshotSession(bare: String, v: Versions): SparkSession = {
+    val cur = published.get(bare)
     if (cur != null && cur.versions == v) return cur.session
     var before = v
     var attempt = 0
     while (true) {
       val s = spark.newSession()
       graft.Tables.init(s) // child sessions don't inherit runtime conf/UDFs
-      val complete = registerOn(s, None, "default")
+      val complete = registerOn(s, None, bare)
       val after = versionVector()
       if (after == before || attempt >= 5) {
         // publish only COMPLETE snapshots: a session missing an
@@ -198,7 +210,7 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
         // so the next request rebuilds while THIS one still gets a
         // usable session (code-review r9).
         if (complete)
-          published.set(Snapshot(if (after == before) after else before, s))
+          published.put(bare, Snapshot(if (after == before) after else before, s))
         return s
       }
       before = after
@@ -207,22 +219,32 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Plan one request's SQL — lock-free on every path. `extraConfs`
-    * (e.g. parquet mergeSchema from a DuckDB `union_by_name=true`
-    * rewrite) forces a PRIVATE session: the cached snapshot session is
-    * shared across requests and must never carry one request's conf. */
+  /** Plan one request's SQL — lock-free on every path. Unranged,
+    * conf-free queries plan on their scope's published snapshot (class
+    * doc); everything else on a PRIVATE session. `extraConfs` (e.g.
+    * parquet mergeSchema from a DuckDB `union_by_name=true` rewrite)
+    * forces one because a snapshot session is shared across requests
+    * and must never carry one request's conf; a command statement
+    * forces one for the same reason. */
   def sqlFor(sqlText: String, timeRangeNs: Option[(Long, Long)],
              bareDb: Option[String],
              extraConfs: Map[String, String] = Map.empty): DataFrame = {
-    if (extraConfs.isEmpty && timeRangeNs.isEmpty && bareDb.forall(_ == "default")) {
-      snapshotSession().sql(sqlText)
-    } else {
+    val bare = bareDb.getOrElse("default")
+    val shareable = extraConfs.isEmpty && timeRangeNs.isEmpty &&
+      !spark.sessionState.sqlParser.parsePlan(sqlText)
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command]
+    val snapshot = if (!shareable) None else {
+      val v = versionVector()
+      published.keySet.removeIf(db => db != "default" && !v.hasDb(db)): Unit
+      if (bare == "default" || v.hasDb(bare)) Some(snapshotSession(bare, v)) else None
+    }
+    snapshot.getOrElse {
       val s = spark.newSession()
       graft.Tables.init(s) // child sessions don't inherit runtime conf/UDFs
-      registerOn(s, timeRangeNs, bareDb.getOrElse("default"))
+      registerOn(s, timeRangeNs, bare)
       extraConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      s.sql(sqlText)
-    }
+      s
+    }.sql(sqlText)
   }
 
   /** Register ONE table's (ranged) view(s) on `s` — the single spelling
@@ -354,4 +376,17 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
     * (SQL-embedded time predicates prune via the FileIndex
     * automatically). Equivalent to `sqlFor(sqlText, None, None)`. */
   def sql(sqlText: String): DataFrame = sqlFor(sqlText, None, None)
+}
+
+private object QueryViews {
+
+  /** Catalog state a snapshot is valid for: every table's data version
+    * plus the artifact publish counter. */
+  final case class Versions(tables: Map[(String, String), Long], artifacts: Long) {
+    def hasDb(db: String): Boolean = tables.keysIterator.exists(_._1 == db)
+  }
+
+  /** An internally consistent planning snapshot: all views registered
+    * at one catalog version vector. */
+  final case class Snapshot(versions: Versions, session: SparkSession)
 }

@@ -185,4 +185,107 @@ class PruningSpec extends SparkSpec {
     views.ensure(None) // version bumped -> re-registered
     assert(spark.table("vc").count() == 2)
   }
+
+  private def count(df: org.apache.spark.sql.DataFrame): Long =
+    df.collect().head.getLong(0)
+
+  test("?db= scoped queries plan on a published per-scope snapshot until the catalog moves") {
+    val root = Files.createTempDirectory("graft-scoped-")
+    val cat = new TableCatalog(root.toString)
+    val w = new IngestWriter(spark, root.toString, cat)
+    import spark.implicits._
+    w.storeDataFrame("sa", "t", Seq((1L, "a")).toDF("id", "s"))
+    w.storeDataFrame("sb", "t", (1 to 3).map(i => (i.toLong, "b")).toDF("id", "s"))
+    val views = new QueryViews(spark, cat)
+    val q = "SELECT count(*) c FROM t"
+    // two requests with no write between them share one session
+    val a1 = views.sqlFor(q, None, Some("sa"))
+    val a2 = views.sqlFor(q, None, Some("sa"))
+    assert(a1.sparkSession eq a2.sparkSession)
+    assert(count(a1) == 1 && count(a2) == 1)
+    // each scope binds its own db's bare names, on its own session
+    val b = views.sqlFor(q, None, Some("sb"))
+    assert(count(b) == 3)
+    assert(!(b.sparkSession eq a1.sparkSession))
+    assert(views.publishedScopes == Set("sa", "sb"))
+    // a write in the scope is visible to the very next scoped query
+    w.storeDataFrame("sa", "t", Seq((2L, "a")).toDF("id", "s"))
+    val a3 = views.sqlFor(q, None, Some("sa"))
+    assert(count(a3) == 2)
+    assert(!(a3.sparkSession eq a1.sparkSession))
+    // and the scope's bare names stay out of the default scope
+    intercept[Exception](views.sqlFor(q, None, None).collect())
+  }
+
+  test("a table created in a scoped db after its snapshot was published resolves by bare name") {
+    val root = Files.createTempDirectory("graft-scoped-create-")
+    val cat = new TableCatalog(root.toString)
+    val w = new IngestWriter(spark, root.toString, cat)
+    import spark.implicits._
+    w.storeDataFrame("sc", "t", Seq((1L, "a")).toDF("id", "s"))
+    val views = new QueryViews(spark, cat)
+    assert(count(views.sqlFor("SELECT count(*) c FROM t", None, Some("sc"))) == 1)
+    // created (no data yet), then written
+    cat.upsert(graft.catalog.TableSpec(database = "sc", name = "fresh",
+      columns = Seq("id" -> "INT64")))
+    assert(count(views.sqlFor("SELECT count(*) c FROM fresh", None, Some("sc"))) == 0)
+    w.storeDataFrame("sc", "later", Seq((5L, "z")).toDF("id", "s"))
+    assert(count(views.sqlFor("SELECT count(*) c FROM later", None, Some("sc"))) == 1)
+  }
+
+  test("artifacts published after a scope's snapshot resolve in that scope") {
+    val root = Files.createTempDirectory("graft-scoped-art-")
+    val cat = new TableCatalog(root.toString)
+    val w = new IngestWriter(spark, root.toString, cat)
+    import spark.implicits._
+    w.storeDataFrame("sd", "t", Seq((1L, "a")).toDF("id", "s"))
+    val views = new QueryViews(spark, cat)
+    val before = views.sqlFor("SELECT count(*) c FROM t", None, Some("sd"))
+    assert(count(before) == 1)
+    val art = root.resolve("art.parquet").toString
+    (1 to 4).map(i => (i.toLong, i * 2L)).toDF("k", "v").write.parquet(art)
+    views.publishArtifactView("art_scoped", art)
+    views.publishArtifactFunction("art_seven",
+      _ => org.apache.spark.sql.catalyst.expressions.Literal(7L))
+    val after = views.sqlFor(
+      "SELECT count(*) c, max(art_seven()) s FROM art_scoped", None, Some("sd"))
+    val row = after.collect().head
+    assert(row.getLong(0) == 4 && row.getLong(1) == 7)
+    assert(!(after.sparkSession eq before.sparkSession))
+  }
+
+  test("?db= for a db outside the catalog plans privately and creates no snapshot") {
+    val root = Files.createTempDirectory("graft-scoped-unknown-")
+    val cat = new TableCatalog(root.toString)
+    val w = new IngestWriter(spark, root.toString, cat)
+    import spark.implicits._
+    w.storeDataFrame("se", "t", Seq((1L, "a")).toDF("id", "s"))
+    val views = new QueryViews(spark, cat)
+    val n1 = views.sqlFor("SELECT count(*) c FROM se_t", None, Some("nosuchdb"))
+    val n2 = views.sqlFor("SELECT count(*) c FROM se_t", None, Some("nosuchdb"))
+    assert(count(n1) == 1 && count(n2) == 1) // flat names still resolve
+    assert(!(n1.sparkSession eq n2.sparkSession))
+    assert(!views.publishedScopes.contains("nosuchdb"))
+    intercept[Exception](views.sqlFor("SELECT count(*) FROM t", None, Some("nosuchdb")).collect())
+    assert(!views.publishedScopes.contains("nosuchdb"))
+  }
+
+  test("command statements run on a private session, never on a published snapshot") {
+    val root = Files.createTempDirectory("graft-cmd-")
+    val cat = new TableCatalog(root.toString)
+    val w = new IngestWriter(spark, root.toString, cat)
+    import spark.implicits._
+    w.storeDataFrame("sf", "t", Seq((1L, "a")).toDF("id", "s"))
+    val views = new QueryViews(spark, cat)
+    Seq(None, Some("sf")).foreach { scope =>
+      val snap = views.sqlFor("SELECT count(*) c FROM sf_t", None, scope).sparkSession
+      views.sqlFor("CREATE TEMPORARY VIEW leak AS SELECT 42 AS x", None, scope)
+      views.sqlFor("SET spark.sql.shuffle.partitions=3", None, scope)
+      intercept[Exception](views.sqlFor("SELECT * FROM leak", None, scope).collect())
+      assert(!snap.catalog.tableExists("leak"))
+      assert(snap.conf.get("spark.sql.shuffle.partitions") != "3")
+      // the snapshot itself was not rebuilt to hide the leak
+      assert(views.sqlFor("SELECT count(*) c FROM sf_t", None, scope).sparkSession eq snap)
+    }
+  }
 }

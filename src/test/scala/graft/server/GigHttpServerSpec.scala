@@ -58,6 +58,35 @@ class GigHttpServerSpec extends SparkSpec {
     assert(unscoped.statusCode() == 500, unscoped.body())
   }
 
+  test("?db= scoped queries see a write to the scope on the very next request") {
+    def scopedCount() = {
+      val r = post("/query?db=fresh", """{"query": "SELECT count(*) AS c FROM vis"}""")
+      assert(r.statusCode() == 200, r.body())
+      r.body()
+    }
+    assert(post("/write?db=fresh", "vis v=1 1700000000000000000").statusCode() == 204)
+    assert(scopedCount().contains(""""c":"1""""))
+    assert(scopedCount().contains(""""c":"1""""))
+    assert(post("/write?db=fresh", "vis v=2 1700000000000000001").statusCode() == 204)
+    assert(scopedCount().contains(""""c":"2""""))
+  }
+
+  test("a temp view or SET sent on /query does not leak into later requests") {
+    assert(post("/write?db=leakdb", "lk v=1 1700000000000000000").statusCode() == 204)
+    Seq("/query", "/query?db=leakdb").foreach { path =>
+      def q(sql: String) = post(path, s"""{"query": "$sql"}""")
+      val mk = q("CREATE TEMPORARY VIEW leak AS SELECT 42 AS x")
+      assert(mk.statusCode() == 200, s"$path ${mk.body()}")
+      val use = q("SELECT * FROM leak")
+      assert(use.statusCode() != 200 && !use.body().contains(""""x":42"""),
+        s"$path ${use.statusCode()} ${use.body()}")
+      assert(q("SET spark.sql.session.timeZone=Asia/Tokyo").statusCode() == 200)
+      val conf = q("SELECT current_timezone() AS tz")
+      assert(conf.statusCode() == 200, s"$path ${conf.body()}")
+      assert(!conf.body().contains("Tokyo"), s"$path ${conf.body()}")
+    }
+  }
+
   test("reference README's canonical DuckDB query runs VERBATIM (VERDICT r7 #2)") {
     // reference README.md:121 — the first query a porting user tries;
     // `::TIMESTAMP` is DuckDB postfix-cast syntax Spark rejects unshimmed.

@@ -7,6 +7,8 @@ consumer would and asserts the contract keys.
 
 Usage: python3 tools/check_bench_line.py <bench_stdout_file|->
 Exit 0 = parseable + contract keys present; nonzero = broken record.
+Negative query values (the failed/killed marker) are a valid record: they
+are printed as a NEGATIVE warning and do not change the exit code.
 """
 import json
 import sys
@@ -37,7 +39,7 @@ def main(path):
           + (f", NEGATIVE (failed/killed): {neg}" if neg else "")
           + f", sf1={len(rec.get('sf1', {}))}, gc_sec={len(rec.get('gc_sec', {}))}"
           + f", cpu_sec={len(rec.get('cpu_sec', {}))}")
-    return 1 if neg else 0
+    return 0
 
 
 if __name__ == "__main__":
