@@ -219,9 +219,11 @@ object Bench {
       if (cpu0 < 0 || cpu1 < 0) -1.0 else math.max(cpu1 - cpu0, 0L) / 1e9)
   }
 
-  private def median3(v: Seq[Double]): Double = {
-    val ok = v.filter(_ >= 0)
-    if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.size / 2)
+  /** Index of the median rep: the middle of the successful
+    * (non-negative) reps ordered by time; rep 0 when every rep failed. */
+  private[graft] def medianRep(v: Seq[Double]): Int = {
+    val ok = v.indices.filter(v(_) >= 0).sortBy(v(_))
+    if (ok.isEmpty) 0 else ok(ok.size / 2)
   }
 
   /** `p02_ngram_jaccard` → `p02`; falls back to the full name if the
@@ -328,15 +330,14 @@ object Bench {
       repHeapMb += heapUsedMb()
       m
     }
-    val med: Map[String, Double] =
-      names.map(n => n -> median3(perRep.map(_(n).sec))).toMap
-    val total = names.map(med).filter(_ >= 0).sum
-    // telemetry of the rep that PRODUCED the median (pairing matters:
-    // the gc/cpu of a different rep can't attribute the median's wall)
+    // the median rep's whole record (pairing matters: the gc/cpu of a
+    // different rep can't attribute the median's wall); -1 if all failed
     val medTele: Map[String, Timed] = names.map { n =>
       val rs = perRep.map(_(n))
-      n -> rs.find(_.sec == med(n)).getOrElse(rs.head)
+      n -> rs(medianRep(rs.map(_.sec)))
     }.toMap
+    val med: Map[String, Double] = medTele.map { case (n, t) => n -> t.sec.max(-1.0) }
+    val total = names.map(med).filter(_ >= 0).sum
 
     // --- sf1 section: 10× derived corpus, warm pass per subset query ---
     val sf1 = scala.collection.mutable.LinkedHashMap.empty[String, Double]

@@ -128,7 +128,8 @@ final class TableCatalog(root: String) {
               distinctTypes.mkString(" vs "))
       }
       val deduped = incoming.distinct
-      val cur = get(db, table).getOrElse(TableSpec(db, table))
+      val existing = get(db, table)
+      val cur = existing.getOrElse(TableSpec(db, table))
       val known = cur.columns.toMap
       deduped.foreach { case (n, t) =>
         known.get(n).foreach { prev =>
@@ -138,7 +139,11 @@ final class TableCatalog(root: String) {
         }
       }
       val added = deduped.filterNot { case (n, _) => known.contains(n) }
-      upsert(cur.copy(columns = cur.columns ++ added))
+      // nothing added to a known table: it is registered and persisted
+      // already — rewriting .table.json on every flush would cost a
+      // write plus an atomic move for no change
+      if (added.isEmpty && existing.isDefined) cur
+      else upsert(cur.copy(columns = cur.columns ++ added))
     }
 
   private def persist(spec: TableSpec): Unit = {

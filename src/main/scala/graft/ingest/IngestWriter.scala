@@ -2,21 +2,33 @@ package graft.ingest
 
 import java.util.UUID
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.catalog.{TableCatalog, TableSpec}
 import graft.index.{FileEntry, MetadataIndex}
+import graft.ingest.IngestWriter.RowChunk
 import graft.lineproto.LineProtocolParser.{Batch, FieldType}
 import graft.sources.ObjectStore
 
 /** The schema-on-write ingest path (reference write pipeline §3.1):
-  * line-protocol batch → typed DataFrame → `__timestamp` injection →
-  * per-row date/hour partition derivation → sorted parquet in
+  * schema evolution → `__timestamp` injection → date/hour partition
+  * derivation → sorted parquet in
   * `{root}/{db}/{table}/date=YYYY-MM-DD/hour=HH/{uuid}.1.parquet` →
   * metadata.json index update.
+  *
+  * Two write paths share staging, publish and the manifest commit. A
+  * buffered line-protocol flush (`store`) holds its rows in driver
+  * memory and carries one arrival stamp, so one partition dir: its rows
+  * become UnsafeRows on the driver and Spark's Parquet writer encodes
+  * them in the flush thread, with no Spark job. DataFrames
+  * (`storeDataFrame`: NDJSON, bulk, StreamIngest) keep the Spark write,
+  * whose tasks read and partition the data where it lives.
   *
   * Differences from the reference, by design (SURVEY §2.1 quirks):
   *  - date AND hour derive per-row from `__timestamp` (the reference
@@ -53,40 +65,29 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     * chunk the fork-join fan-out costs more than it saves. */
   private[ingest] val ConvertChunkRows = 8192
 
-  /** Line-proto batch → DataFrame with the batch's own schema.
-    *
-    * r13 buffered-throughput fix — the batch is converted to compact
-    * UnsafeRow BYTES on the driver, in parallel chunks, and handed to
-    * Spark via internalCreateDataFrame. The prior shapes all paid this
-    * cost serially somewhere: parallelize(Vector[Row], 1) re-ran
-    * CatalystTypeConverters per row inside the single write task
-    * (profiled ~1.4 s of the ~2 s flush at 320 k rows); fanning raw
-    * parsed Lines across slices just moved it into the driver's serial
-    * task-binary serialization (nested case classes Java-serialize far
-    * worse than bytes); even parallelize(Array[UnsafeRow]) still pushed
-    * 320 k individual Externalizable objects through
-    * ObjectOutputStream (~0.3 s/flush). Here the flush thread's idle
-    * cores build flat per-chunk (bytes, offsets) buffers (fork-join
-    * over disjoint ranges, one codegen'd UnsafeProjection per chunk —
-    * instances are not thread-safe, the generated class is cached), the
-    * task payload Java-serializes as a handful of primitive arrays, and
-    * the task re-points shared-buffer UnsafeRows with ZERO copies — the
-    * write task starts directly at the null-pad projection + sort +
-    * parquet encode. Safe without per-row copies because every consumer
-    * below (Project codegen, the sorter's insert) writes its OWN output
-    * buffer; the chunk bytes are immutable. */
-  def toDataFrame(batch: Batch): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
+  /** The table's data columns in catalog order, as the parquet file
+    * stores them: `__timestamp` never null (REQUIRED, as the Spark
+    * write's literal column leaves it), every other column nullable. */
+  private def tableSchema(spec: TableSpec): StructType =
+    StructType(spec.columns.map { case (n, t) =>
+      StructField(n, sparkType(t), nullable = n != "__timestamp")
+    })
+
+  /** Line-proto batch → flat UnsafeRow chunks in `schema`, the table's
+    * full catalog column order: columns the batch lacks stay null and
+    * `__timestamp` is the flush's one arrival stamp. The flush thread's
+    * idle cores build the chunks in parallel (fork-join over disjoint
+    * row ranges, one codegen'd UnsafeProjection per chunk — instances
+    * are not thread-safe, the generated class is cached). */
+  private def toRowChunks(batch: Batch, schema: StructType, tsNs: Long): Array[RowChunk] = {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
     import org.apache.spark.unsafe.Platform
     import org.apache.spark.unsafe.types.UTF8String
-    import graft.ingest.IngestWriter.RowChunk
 
-    val fields = batch.schema.map { case (n, t) => StructField(n, sparkType(typeName(t))) }
-    val schema = StructType(fields)
-    val byName = batch.schema.map(_._1).zipWithIndex.toMap
+    val byName = schema.fieldNames.zipWithIndex.toMap
     val timeIdx = byName("time")
-    val width = fields.length
+    val tsIdx = byName("__timestamp")
+    val width = schema.length
     val rows = batch.rows
     val n = rows.length
 
@@ -113,6 +114,7 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
           })
         }
         scratch.update(timeIdx, line.timeNs)
+        scratch.update(tsIdx, tsNs)
         val r = proj(scratch)
         val sz = r.getSizeInBytes
         if (pos + sz > bytes.length)
@@ -122,8 +124,7 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
         offsets(i - lo + 1) = pos
         i += 1
       }
-      RowChunk(width, hi - lo, offsets,
-        if (pos == bytes.length) bytes else java.util.Arrays.copyOf(bytes, pos))
+      RowChunk(offsets, if (pos == bytes.length) bytes else java.util.Arrays.copyOf(bytes, pos))
     }
 
     val chunks = math.max(1, math.min(spark.sparkContext.defaultParallelism,
@@ -133,19 +134,58 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     else java.util.stream.IntStream.range(0, chunks).parallel().forEach { c =>
       built(c) = convertChunk((n.toLong * c / chunks).toInt, (n.toLong * (c + 1) / chunks).toInt)
     }
-    val rdd = spark.sparkContext.parallelize(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(built), 1)
-      .mapPartitions { it =>
-        it.flatMap { ch =>
-          Iterator.tabulate(ch.count) { i =>
-            val r = new UnsafeRow(ch.width)
-            r.pointTo(ch.bytes, Platform.BYTE_ARRAY_OFFSET + ch.offsets(i),
-              ch.offsets(i + 1) - ch.offsets(i))
-            r: InternalRow
-          }
-        }
-      }
-    org.apache.spark.sql.GraftColumnBridge.internalDf(spark, rdd, schema)
+    built
+  }
+
+  /** The chunks' rows in file order. A default table (order_by is
+    * `__timestamp`, one literal per flush) keeps arrival order and
+    * re-points one UnsafeRow per chunk. A custom order_by sorts row
+    * pointers on a generated ordering — ascending, nulls first, as
+    * `sortWithinPartitions` orders them; the buffer caps a flush near
+    * 1 M rows, so the pointer array stays small. No row is copied. */
+  private def fileRows(spec: TableSpec, schema: StructType,
+                       chunks: Array[RowChunk]): Iterator[InternalRow] = {
+    val width = schema.length
+    val keys = spec.orderBy.filterNot(_ == "__timestamp")
+    if (keys.isEmpty) chunks.iterator.flatMap { ch =>
+      val r = new UnsafeRow(width)
+      Iterator.range(0, ch.count).map(ch.point(r, _))
+    } else {
+      import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
+      import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+      val ordering = GenerateOrdering.generate(keys.map { k =>
+        val i = schema.fieldNames.indexOf(k)
+        if (i < 0) throw new IllegalArgumentException(
+          s"order_by column '$k' is not a column of ${spec.database}.${spec.name}")
+        SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)
+      })
+      val ptrs = chunks.flatMap(ch => Array.tabulate(ch.count)(ch.point(new UnsafeRow(width), _)))
+      java.util.Arrays.sort[UnsafeRow](ptrs, ordering)
+      ptrs.iterator
+    }
+  }
+
+  /** Encode `rows` into ONE parquet file under `dir`, in this thread,
+    * with the OutputWriterFactory Spark's file-source write builds:
+    * the same ParquetWriteSupport, session codec, parquet confs and
+    * footer key-value metadata, without the job around it. */
+  private def writeParquet(dir: HPath, schema: StructType,
+                           rows: Iterator[InternalRow]): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val out = factory.newInstance(
+      new HPath(dir, "part-0" + factory.getFileExtension(ctx)).toString, schema, ctx)
+    try rows.foreach(out.write)
+    catch {
+      case NonFatal(e) =>
+        try out.close() catch { case NonFatal(s) => e.addSuppressed(s) }
+        throw e
+    }
+    out.close()
   }
 
   /** On HiveMerge tables `date`/`hour` are DERIVED partition columns: the
@@ -161,29 +201,37 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
   private def guardReservedPartitionCols(db: String, table: String,
                                          names: Seq[String]): Unit = {
     val engine = catalog.get(db, table).map(_.engine).getOrElse("HiveMerge")
-    if (engine == "HiveMerge") Seq("date", "hour").foreach { c =>
+    if (engine == "HiveMerge") IngestWriter.PartitionPatterns.foreach { case (c, _) =>
       if (names.contains(c)) throw new IllegalArgumentException(
         s"column '$c' is reserved on HiveMerge tables (derived partition)")
     }
   }
 
-  /** Store one parsed batch: evolve schema (first-type-wins), add
-    * `__timestamp`, write partitioned+sorted, index. Returns URIs written. */
+  /** Store one parsed batch: evolve schema (first-type-wins), stamp
+    * `__timestamp`, write the flush's one sorted file in this thread,
+    * index. Returns URIs written. */
   def store(batch: Batch): Seq[String] = {
-    // the engine OWNS __timestamp (arrival-time projection below): a
-    // client field/tag of that name would silently lose its values to
-    // the projection and double-enter the catalog — reject loudly
+    // the engine OWNS __timestamp (the arrival stamp below): a client
+    // field/tag of that name would silently lose its values to the
+    // stamp and double-enter the catalog — reject loudly
     if (batch.schema.exists(_._1 == "__timestamp"))
       throw new IllegalArgumentException(
         "column '__timestamp' is reserved (engine arrival time); " +
           "use the line-protocol timestamp token for event time")
     guardReservedPartitionCols(batch.database, batch.table, batch.schema.map(_._1))
-    val spec0 = catalog.evolve(batch.database, batch.table,
+    val mark = phaseClock()
+    val spec = catalog.evolve(batch.database, batch.table,
       batch.schema.map { case (n, t) => (n, typeName(t)) } :+ ("__timestamp" -> "INT64"))
-    // __timestamp is ONE literal for the whole flush -> every row
-    // compares equal on it, so it contributes nothing to the file sort
-    write(spec0, toDataFrame(batch).withColumn("__timestamp", lit(nowNs())),
-      constSorted = Set("__timestamp"))
+    val schema = tableSchema(spec)
+    val tsNs = nowNs()
+    val chunks = toRowChunks(batch, schema, tsNs)
+    mark("convert")
+    staged(spec, mark) { staging =>
+      val dir = if (spec.engine != "HiveMerge") staging
+        else new HPath(staging, IngestWriter.partitionDir(tsNs,
+          spark.sessionState.conf.sessionLocalTimeZone))
+      writeParquet(dir, schema, fileRows(spec, schema, chunks))
+    }
   }
 
   /** Store an arbitrary DataFrame (NDJSON/createDataFrame ingest path).
@@ -241,7 +289,6 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
   private def write(spec: TableSpec, dfIn: DataFrame,
                     singleFile: Boolean = true,
                     constSorted: Set[String] = Set.empty): Seq[String] = {
-    val tableDir = catalog.tableDir(spec.database, spec.name)
     // null-pad to the table's full first-seen schema (reference
     // data_store.go:109-141 back-fill)
     val full = catalog.get(spec.database, spec.name).get
@@ -250,77 +297,66 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     }.select(full.columns.map(c => col(c._1)): _*)
 
     val hive = spec.engine == "HiveMerge"
-    // reserved date/hour columns were rejected by BOTH public entry
-    // points (guardReservedPartitionCols) BEFORE catalog.evolve ran —
-    // the guard cannot live here: by write() time the reserved column
-    // is already persisted in the spec (review r15: a rejected write
-    // left it in the catalog forever — every later write null-padded
-    // it, and any future client field of that name failed evolve with
-    // a bogus type conflict)
+    // reserved date/hour client columns were rejected before
+    // catalog.evolve ran (guardReservedPartitionCols)
     val tsUs = expr("__timestamp DIV 1000")
     val partitioned =
-      if (hive)
-        df.withColumn("date", date_format(timestamp_micros(tsUs), "yyyy-MM-dd"))
-          .withColumn("hour", date_format(timestamp_micros(tsUs), "HH"))
-      else df
-
-    // stage via Spark, then publish with reference-style names. Local
-    // tables: atomic move. Object-store tables (spec.dataUrl): bytes are
-    // copied to their FINAL key and the metadata.json manifest is the
-    // commit — no rename exists on S3 (reference save_service_s3.go:55-88).
-    //
-    // Staging runs on the Hadoop FileSystem API, NOT java.nio: on a real
-    // cluster `sorted.write.parquet(staging)` lands wherever the staging
-    // URI's FS says (shared HDFS/s3a), which the driver could never
-    // `Files.walk`. The same code therefore serves local[?], HDFS and s3a
-    // masters — only the table root URI changes.
-    // per-phase wall clock under GRAFT_FLUSH_DEBUG (r14 task 7: know
-    // what a flush cycle spends before touching the hot path)
-    val wdbg = sys.env.contains("GRAFT_FLUSH_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (wdbg) {
-      val now = System.nanoTime()
-      println(f"[wdbg] $phase=${(now - tMark) / 1e9}%.3f")
-      tMark = now
+      if (!hive) df
+      else IngestWriter.PartitionPatterns.foldLeft(df) { case (d, (c, p)) =>
+        d.withColumn(c, date_format(timestamp_micros(tsUs), p))
+      }
+    staged(spec, phaseClock()) { staging =>
+      // coalesce(1), not repartition(1): no round-robin exchange. The
+      // parallel (streaming) path sorts each task's slice with the hive
+      // partition cols leading, so every file is ordered within its
+      // dir. Keys the caller proved constant for this batch drop out of
+      // the sort: rows all-equal on a key ARE sorted by it.
+      val sortKeys = spec.orderBy.filterNot(constSorted)
+      val sorted =
+        if (singleFile) {
+          val one = partitioned.coalesce(1)
+          if (sortKeys.isEmpty) one
+          else one.sortWithinPartitions(sortKeys.map(col): _*)
+        } else {
+          val keys = (if (hive) IngestWriter.PartitionPatterns.map(_._1) else Nil) ++ sortKeys
+          if (keys.isEmpty) partitioned
+          else partitioned.sortWithinPartitions(keys.distinct.map(col): _*)
+        }
+      val writer = sorted.write.mode("append")
+      (if (hive) writer.partitionBy(IngestWriter.PartitionPatterns.map(_._1): _*) else writer)
+        .parquet(staging.toString)
     }
+  }
+
+  /** Per-phase wall clock under GRAFT_FLUSH_DEBUG: each `mark(phase)`
+    * prints the time since the previous mark. */
+  private def phaseClock(): String => Unit =
+    if (!sys.env.contains("GRAFT_FLUSH_DEBUG")) _ => ()
+    else {
+      var t = System.nanoTime()
+      phase => { val now = System.nanoTime(); println(f"[wdbg] $phase=${(now - t) / 1e9}%.3f"); t = now }
+    }
+
+  /** Run `stage` into a fresh `tmp/{uuid}` staging dir, then publish
+    * every staged parquet file under its reference-style name and
+    * commit the manifests. Local tables: atomic move. Object-store
+    * tables (spec.dataUrl): bytes are copied to their FINAL key and the
+    * metadata.json manifest is the commit — no rename exists on S3
+    * (reference save_service_s3.go:55-88). Staging runs on the Hadoop
+    * FileSystem API, not java.nio, so a Spark write on a cluster can
+    * stage on shared HDFS/s3a: only the table root URI changes. */
+  private def staged(spec: TableSpec, mark: String => Unit)(stage: HPath => Unit): Seq[String] = {
+    val tableDir = catalog.tableDir(spec.database, spec.name)
     val hconf = spark.sparkContext.hadoopConfiguration
     val tableUri = new HPath(tableDir.toUri)
     val fs = ObjectStore.publishFs(tableUri, hconf)
     val staging = new HPath(new HPath(tableUri, "tmp"), UUID.randomUUID().toString)
     fs.mkdirs(staging)
-    // staging is removed in finally: a failed Spark write or publish step
-    // must not leak tmp/{uuid} partial parquet (at a 1 s flush cadence a
-    // flaky table would accumulate unbounded garbage; Compactor already
-    // wraps its identical pattern)
+    // removed in finally: a failed write or publish must not leak
+    // tmp/{uuid} partial parquet at a 1 s flush cadence
     try {
-    // coalesce(1), not repartition(1): reads inputs straight into the
-    // single sort task instead of adding a round-robin exchange first.
-    // Parallel (streaming) path: sort each existing task's slice with
-    // the hive partition cols leading so every written file is still
-    // internally ordered by orderBy within its (date, hour) dir.
-    // r14 (profiled): the flush cycle is dominated by the single
-    // coalesce(1) sort+encode task, and on default tables the sort key
-    // is ONLY __timestamp — a per-flush constant literal, so all rows
-    // compare equal and the external sorter's full pass over the batch
-    // orders nothing. Keys the caller proved constant for this batch
-    // drop out of the sort; a file whose rows are all-equal on the key
-    // IS sorted by it, so the sorted-file invariant (compactor k-way
-    // merge, read_parquet_mergetree) holds bit-for-bit.
-    val sortKeys = spec.orderBy.filterNot(constSorted)
-    val sorted =
-      if (singleFile) {
-        val one = partitioned.coalesce(1)
-        if (sortKeys.isEmpty) one
-        else one.sortWithinPartitions(sortKeys.map(col): _*)
-      } else {
-        val keys = (if (hive) Seq("date", "hour") else Nil) ++ sortKeys
-        if (keys.isEmpty) partitioned
-        else partitioned.sortWithinPartitions(keys.distinct.map(col): _*)
-      }
-    val writer = sorted.write.mode("append")
-    (if (hive) writer.partitionBy("date", "hour") else writer)
-      .parquet(staging.toString)
-    mark("sort_encode_job")
+    stage(staging)
+    mark("encode")
 
     // ONE spelling of the remote key layout (ObjectStore owns it): a
     // divergent inline reassembly here would publish to keys the
@@ -337,10 +373,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       }
       buf.result()
     }
-    // plan final names up front so footer stats (read from the STAGED
-    // bytes — publish never rewrites them) can be gathered for ALL files
-    // in one Spark job instead of a serial driver loop (a T-task ×
-    // P-partition micro-batch would otherwise cost T×P driver footer opens)
+    // final names up front: footer stats read the STAGED bytes (publish
+    // never rewrites them), for all files at once
     val planned = written.map { part =>
       val rel = part.getParent.toString.stripPrefix(stagingStr)
         .stripPrefix("/") // "" or date=../hour=..
@@ -348,12 +382,10 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     }
     val entries: Map[String, FileEntry] = ParquetStats.manifestEntries(
       spark, planned.map { case (p, _, name) => (p.toString, name) })
-    mark("footer_stats_job")
-    // published-but-not-yet-committed URIs: a failure between publish
-    // and the manifest commit would otherwise leak final-key objects
-    // that no manifest references and no drop queue can ever reclaim
-    // (unbounded at a 1 s flush cadence on a flaky table — the same
-    // argument as the staging cleanup in `finally`)
+    mark("stats")
+    // published-but-not-yet-committed URIs: a failure before the
+    // manifest commit would leak final-key objects no manifest or drop
+    // queue can ever reclaim
     val uncommitted = scala.collection.mutable.LinkedHashSet.empty[String]
     try {
     val out = planned.map { case (part, rel, name) =>
@@ -384,13 +416,13 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       group.foreach { case (_, _, u) => uncommitted -= u }
     }
     catalog.bumpVersion(spec.database, spec.name)
-    mark("manifest_commit")
+    mark("commit")
     out.map(_._3)
     } catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         uncommitted.foreach { u =>
           try ObjectStore.delete(spark, u)
-          catch { case scala.util.control.NonFatal(_) => () }
+          catch { case NonFatal(_) => () }
         }
         throw e
     }
@@ -399,13 +431,33 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
 }
 
 object IngestWriter {
-  /** Flat UnsafeRow payload for one driver-built conversion chunk:
-    * `bytes` holds `count` concatenated UnsafeRows, row i spanning
-    * [offsets(i), offsets(i+1)). Primitive arrays only, so the task
-    * binary serializes as two straight array writes instead of count
-    * individual Externalizable objects. */
-  private[ingest] final case class RowChunk(width: Int, count: Int,
-                                            offsets: Array[Int], bytes: Array[Byte])
+  /** One driver-built conversion chunk: `count` UnsafeRows concatenated
+    * in `bytes`, row i spanning [offsets(i), offsets(i+1)). */
+  private[ingest] final case class RowChunk(offsets: Array[Int], bytes: Array[Byte]) {
+    def count: Int = offsets.length - 1
+    def point(r: UnsafeRow, i: Int): UnsafeRow = {
+      r.pointTo(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + offsets(i),
+        offsets(i + 1) - offsets(i))
+      r
+    }
+  }
+
+  /** The hive partition columns and their `date_format` patterns over
+    * `__timestamp` — the one spelling of the `date=/hour=` layout, which
+    * the Spark write evaluates per row and the in-process flush once. */
+  private[ingest] val PartitionPatterns = Seq("date" -> "yyyy-MM-dd", "hour" -> "HH")
+
+  /** `date=…/hour=…` of one `__timestamp` (epoch ns) in the session
+    * time zone `zone`: the formatter `date_format(timestamp_micros(
+    * __timestamp DIV 1000), p)` evaluates, on the same truncating DIV. */
+  private[ingest] def partitionDir(tsNs: Long, zone: String): String = {
+    import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
+    val zoneId = DateTimeUtils.getZoneId(zone)
+    PartitionPatterns.map { case (c, p) =>
+      val f = TimestampFormatter(p, zoneId, LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false)
+      s"$c=${f.format(tsNs / 1000)}"
+    }.mkString("/")
+  }
 }
 
 /** Footer-level stats for one parquet file (no data scan). */

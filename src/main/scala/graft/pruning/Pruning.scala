@@ -225,14 +225,21 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
     * parquet mergeSchema from a DuckDB `union_by_name=true` rewrite)
     * forces one because a snapshot session is shared across requests
     * and must never carry one request's conf; a command statement
-    * forces one for the same reason. */
+    * forces one for the same reason. A command on the global temp
+    * database is refused: no private session isolates that catalog. */
   def sqlFor(sqlText: String, timeRangeNs: Option[(Long, Long)],
              bareDb: Option[String],
              extraConfs: Map[String, String] = Map.empty): DataFrame = {
     val bare = bareDb.getOrElse("default")
-    val shareable = extraConfs.isEmpty && timeRangeNs.isEmpty &&
-      !spark.sessionState.sqlParser.parsePlan(sqlText)
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command]
+    val isCommand = spark.sessionState.sqlParser.parsePlan(sqlText) match {
+      case c: org.apache.spark.sql.catalyst.plans.logical.Command =>
+        if (namesGlobalTemp(c)) throw new graft.server.BadRequest(
+          "commands on the global temp database are not allowed on /query: " +
+            "it is shared by every session of the server")
+        true
+      case _ => false
+    }
+    val shareable = extraConfs.isEmpty && timeRangeNs.isEmpty && !isCommand
     val snapshot = if (!shareable) None else {
       val v = versionVector()
       published.keySet.removeIf(db => db != "default" && !v.hasDb(db)): Unit
@@ -245,6 +252,27 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
       extraConfs.foreach { case (k, v) => s.conf.set(k, v) }
       s
     }.sql(sqlText)
+  }
+
+  /** Whether a command targets an object in the global temp database
+    * (create, replace, alter, rename, drop; DESCRIBE names its target the
+    * same way): that catalog is shared by every session of the server
+    * and holds the `read_csv` views, so such a command would reach other
+    * clients' requests. */
+  private def namesGlobalTemp(cmd: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.analysis._
+    import org.apache.spark.sql.catalyst.plans.logical.RenameTable
+    import org.apache.spark.sql.execution.command.CreateViewCommand
+    val gdb = spark.conf.get("spark.sql.globalTempDatabase")
+    def inGdb(parts: Seq[String]) = parts.dropRight(1).exists(_.equalsIgnoreCase(gdb))
+    cmd.exists {
+      case c: CreateViewCommand => c.viewType == GlobalTempView
+      case r: RenameTable => inGdb(r.newName)
+      case u: UnresolvedIdentifier => inGdb(u.nameParts)
+      case u: UnresolvedView => inGdb(u.multipartIdentifier)
+      case u: UnresolvedTableOrView => inGdb(u.multipartIdentifier)
+      case _ => false
+    }
   }
 
   /** Register ONE table's (ranged) view(s) on `s` — the single spelling

@@ -26,14 +26,4 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** DataFrame straight over InternalRows (`internalCreateDataFrame` is
-    * `private[sql]`). The hot-ingest path builds UnsafeRows driver-side;
-    * the public createDataFrame(RDD[Row]) route would re-run a
-    * CatalystTypeConverters pass per row inside the write task — the
-    * exact cost this entry point exists to skip. */
-  def internalDf(spark: SparkSession,
-                 rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                 schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 }

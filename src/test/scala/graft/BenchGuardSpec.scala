@@ -225,4 +225,14 @@ class BenchGuardSpec extends AnyFunSuite {
     // a tmpdir outside any repo yields git exit!=0 -> empty-safe path
     if (noSha.isEmpty) assert(noDirty.isEmpty)
   }
+
+  test("medianRep picks the median rep by index: ties, failed reps, all failed") {
+    assert(Bench.medianRep(Seq(3.0, 1.0, 2.0)) == 2)
+    // equal times: one of the tied reps, never a fallback to rep 0
+    assert(Set(1, 2)(Bench.medianRep(Seq(9.0, 2.0, 2.0))))
+    // failed reps (-1) drop out before the median is taken
+    assert(Bench.medianRep(Seq(-1.0, 5.0, 4.0)) == 1)
+    assert(Bench.medianRep(Seq(-1.0, -1.0, 4.0)) == 2)
+    assert(Bench.medianRep(Seq(-1.0, -1.0, -1.0)) == 0)
+  }
 }

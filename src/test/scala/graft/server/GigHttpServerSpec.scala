@@ -87,6 +87,41 @@ class GigHttpServerSpec extends SparkSpec {
     }
   }
 
+  test("a /query command on the global temp database is refused and leaks nothing") {
+    val mk = post("/query", """{"query": "CREATE GLOBAL TEMPORARY VIEW gleak AS SELECT 42 AS x"}""")
+    assert(mk.statusCode() == 400, mk.body())
+    val use = post("/query", """{"query": "SELECT * FROM global_temp.gleak"}""")
+    assert(!use.body().contains(""""x":42"""), s"${use.statusCode()} ${use.body()}")
+    Seq("CREATE OR REPLACE GLOBAL TEMP VIEW gleak AS SELECT 1 AS x",
+      "CREATE OR REPLACE VIEW GLOBAL_TEMP.gleak AS SELECT 1 AS x",
+      "ALTER VIEW global_temp.gleak AS SELECT 1 AS x",
+      "ALTER VIEW global_temp.gleak RENAME TO global_temp.g2",
+      "DROP VIEW IF EXISTS global_temp.gleak").foreach { sql =>
+      Seq("/query", "/query?db=leakdb").foreach { path =>
+        val r = post(path, s"""{"query": "$sql"}""")
+        assert(r.statusCode() == 400, s"$path $sql: ${r.body()}")
+      }
+    }
+    // a read_csv view lives in that catalog: a refused replace leaves it
+    // serving the file
+    val dir = Files.createTempDirectory("gcsv")
+    Files.write(dir.resolve("t.csv"), "city,pop\nrome,2761632\noslo,709037\n".getBytes(UTF_8))
+    val csvSql = s"SELECT city FROM read_csv_auto('${dir.resolve("t.csv")}') ORDER BY city"
+    val before = post("/query", s"""{"query": "$csvSql"}""")
+    assert(before.statusCode() == 200 && before.body().contains("oslo"), before.body())
+    val csvViews = spark.catalog.listTables("global_temp").collect().map(_.name)
+      .filter(_.startsWith("__graft_csv_"))
+    assert(csvViews.nonEmpty)
+    csvViews.foreach { v =>
+      val r = post("/query",
+        s"""{"query": "CREATE OR REPLACE GLOBAL TEMPORARY VIEW $v AS SELECT 'evil' AS city"}""")
+      assert(r.statusCode() == 400, r.body())
+    }
+    val after = post("/query", s"""{"query": "$csvSql"}""")
+    assert(after.statusCode() == 200, after.body())
+    assert(after.body() == before.body() && !after.body().contains("evil"), after.body())
+  }
+
   test("reference README's canonical DuckDB query runs VERBATIM (VERDICT r7 #2)") {
     // reference README.md:121 — the first query a porting user tries;
     // `::TIMESTAMP` is DuckDB postfix-cast syntax Spark rejects unshimmed.
