@@ -124,31 +124,6 @@ object Bench {
         catch { case _: Throwable => () }
     }
 
-  private def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.load's NTZ→ts conversion assumes UTC sessions (Verify
-      // pins it too): on a non-UTC host the bench would scan DIFFERENT
-      // row subsets than the correctness run for time-window queries
-      .config("spark.sql.session.timeZone", "UTC")
-      // coalesce post-shuffle partitions by size, not parallelism —
-      // collapses the many tiny exchanges these small-SF runs otherwise
-      // schedule cores-wide. The advisory size must be SMALL: coalescing
-      // merges adjacent partitions up to the target, so 64 MB (default)
-      // folded the heavy self-join exchanges (~10 MB/partition at sf0.1)
-      // down to a few tasks — measured +14..34% on p02/p03/p06/q12 in r3.
-      // At 1 MB sub-MB exchanges still collapse to one task while
-      // anything core-scale keeps its full fan-out (A/B: p02 3.44 s @
-      // 64 MB, 2.54 s @ 1 MB, 2.64 s with parallelismFirst=true).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Wall seconds plus the JVM-wide GC/CPU deltas observed across the
     * run — the stall-attribution telemetry (VERDICT r15 #1: the
     * canonical r15 record carried two run-order stall episodes on
@@ -242,7 +217,6 @@ object Bench {
     val missing = Sf1Subset.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"Sf1Subset names not in SparkEntry.queries: $missing")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // 480 s: the r6 subset adds the sf0.1 heavy tail (p49/p27/p44/p47),
     // whose sf1 runs alone can spend ~3 min; budget-skips (-2) on the
@@ -267,7 +241,7 @@ object Bench {
     // Captured BEFORE the run: a commit landing mid-bench must not
     // relabel measurements taken on the pre-commit tree.
     val (headSha, treeDirty) = BenchGuard.gitProvenance()
-    var spark = session(cpus)
+    var spark = GraftSession("graft-bench")
     // ONE keep-set for every hygiene drop in this session, captured
     // BEFORE the warm pass (review r15: per-section snapshots taken
     // after warmup pinned the warm queries' orphaned checkpoints for
@@ -613,7 +587,7 @@ object Bench {
     spark.stop()
     System.gc()
     Thread.sleep(2000)
-    spark = session(cpus)
+    spark = GraftSession("graft-bench")
     val ingestRows = sys.env.getOrElse("SPARK_GRAFT_INGEST_ROWS", "20000000").toLong
     // buffered cap = 10 flush cycles (32 writers × 10k × 10), not 2:
     // after the r13 cadence fix a cycle is ~0.5-1 s, and a 2-cycle run

@@ -106,13 +106,7 @@ object IncrementalPrepare {
     require(args.length >= 2,
       "usage: IncrementalPrepare <documentsParquet> <stateDir> [tau]")
     val tau = if (args.length > 2) args(2).toDouble else 0.5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-incremental-prepare")
     run(spark, args(0), args(1), tau)
     spark.stop()
   }

@@ -116,13 +116,7 @@ object IngestBench {
 
   def main(args: Array[String]): Unit = {
     val totalRows = sys.env.getOrElse("SPARK_GRAFT_INGEST_ROWS", "20000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-ingest-bench")
     val json = run(spark, bulkRows = totalRows, streamRows = totalRows,
       bufferedRows = totalRows, threads = 32)
     println(s"""{"metric":"ingest_rows_per_sec",${json.drop(1)}""")

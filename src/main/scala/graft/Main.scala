@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.server.{GigHttpServer, GraftConfig}
 
 /** The runnable service — the analog of the reference's `main.go:31-39`:
@@ -10,8 +9,8 @@ import graft.server.{GigHttpServer, GraftConfig}
   *   sbt "runMain graft.Main [config.yaml]"
   *   GIGAPI_ROOT=/data PORT=7971 sbt "runMain graft.Main"
   *
-  * Spark master comes from SPARK_MASTER (default local[*]) so the same
-  * entrypoint serves a laptop and a spark-submit'd cluster driver.
+  * The session is [[GraftSession]]'s profile, so the same entrypoint
+  * serves a laptop and a spark-submit'd cluster driver.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -23,14 +22,7 @@ object Main {
     val cfg = GraftConfig.load(cfgFile)
     println(s"Loaded configuration: $cfg")
 
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SQL_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft")
 
     val server = GigHttpServer.fromConfig(spark, cfg).start()
     sys.addShutdownHook {

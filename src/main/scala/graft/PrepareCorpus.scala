@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable corpus-preparation job:
   * `runMain graft.PrepareCorpus <documentsParquet> <outDir> [tau]`
   *
@@ -18,13 +16,7 @@ object PrepareCorpus {
       "usage: PrepareCorpus <documentsParquet> <outDir> [tau]")
     val Array(in, out) = args.take(2)
     val tau = if (args.length > 2) args(2).toDouble else 0.5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-prepare-corpus")
     val chunks = ops.CorpusPipeline.prepare(spark.read.parquet(in), tau)
     chunks.write.mode("overwrite").parquet(out)
     val n = spark.read.parquet(out).count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: `runMain graft.Profile <query> [sfDir]` prints
   * the formatted physical plan and three timed runs of one SparkEntry
   * query — the explain-then-iterate loop for shuffle/pushdown auditing.
@@ -14,18 +12,7 @@ object Profile {
     // to this machine's layout)
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sfDir = if (args.length > 1) args(1) else baseDir
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's AQE setup (see Bench.scala: small advisory size so
-      // only sub-MB exchanges collapse; 64 MB default folded heavy
-      // self-joins to a few tasks)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-profile")
     // "10x" derives (or reuses) Bench's scaled corpus from sf0.1 so sf1
     // hot spots can be profiled outside a full bench run
     val dir = if (sfDir == "10x") BenchData.ensureScaled(spark, baseDir)

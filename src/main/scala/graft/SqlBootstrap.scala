@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** `--stdin` SQL bootstrap (reference stdin/init.go:15-49, N30): read SQL
   * from stdin, execute statement-by-statement against a graft session,
   * print each result as the reference's `{"results":[...]}` JSON, exit.
@@ -13,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SqlBootstrap {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(".")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-sql-bootstrap")
     Tables.init(spark)
     val catalog = new graft.catalog.TableCatalog(root)
     // same view path as /query (FileIndex-backed), so result schemas —

@@ -362,36 +362,6 @@ object SearchOps {
       dense0.select(col("qid"), col("nid").as("id"), col("rn").as("rd")),
       k, kRrf)
 
-  /** [[hybridRrfWith]] with the two rankings submitted as CONCURRENT
-    * jobs (r16 optimization, guide §2.6 "overlap independent jobs"):
-    * the sparse chain (seed collect → postings → dfs → score → top-k)
-    * and the dense probe chain are independent until the fusion join,
-    * but one action executes them as a single serialized stage DAG —
-    * ~30 sub-second stages back to back, leaving most cores idle in
-    * every stage tail. Each side reduces to an nSeeds×k frame, so both
-    * are materialized (localCheckpoint) from a 2-thread pool — the
-    * parameter-BOUNDED class of frame the r15 10× A/Bs kept (p99), not
-    * a corpus-scale one — and the fusion joins two tiny local frames.
-    * Row-identical to [[hybridRrfWith]] by construction (same two
-    * rankings, same fusion — spec-pinned in SearchOpsSpec); the pool is
-    * created inside the call so Spark's inheritable job group/
-    * description still reach the submitted jobs. */
-  def hybridRrfConcurrent(docs: DataFrame, dense0: DataFrame, nSeeds: Int,
-                          k: Int = 10, kRrf: Int = 60): DataFrame = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val denseF = Future(
-        dense0.select(col("qid"), col("nid").as("id"), col("rn").as("rd"))
-          .localCheckpoint(true))
-      val sparseF = Future(sparseRanking(docs, nSeeds, k).localCheckpoint(true))
-      rrfFuse(Await.result(sparseF, Duration.Inf),
-        Await.result(denseF, Duration.Inf), k, kRrf)
-    } finally pool.shutdown()
-  }
-
   /** The BM25 more-like-this ranking of [[hybridRrfWith]]'s sparse side
     * as a (qid, id, rs) top-k frame: seed queries are a bounded driver
     * collect, ranking is [[bm25Batch]]. */

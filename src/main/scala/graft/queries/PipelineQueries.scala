@@ -1354,10 +1354,7 @@ object PipelineQueries {
       val emb = Tables.load(s, dir, "embeddings")
       val (km, assigned) = ivfIndexFor(s, dir, ivfNlistFor(s, dir))
       hybridCenters.set(km.clusterCenters.map(_.toArray))
-      // r16 (guide §2.6): the sparse BM25 chain and the dense IVF probe
-      // are independent until the fusion — run them as concurrent jobs
-      // (row-identical, spec-pinned; SearchOps.hybridRrfConcurrent)
-      SearchOps.hybridRrfConcurrent(
+      SearchOps.hybridRrfWith(
         Tables.loadSpread(s, dir, "documents"),
         SimilarityOps.ivfTopKWith(km, assigned,
           emb.filter(col("vec_id") < 5), 10, nprobe = 4),

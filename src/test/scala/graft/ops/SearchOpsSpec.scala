@@ -174,26 +174,4 @@ class SearchOpsSpec extends SparkSpec {
       .select("qid", "id").as[(Long, Long)].collect()
     assert(pruned.length == 4 * 10 && !pruned.exists(p => p._1 == p._2))
   }
-
-  test("hybridRrfConcurrent == hybridRrfWith (p95's r16 binding: same rankings, same fusion)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val rows = (0 until 50).map { i =>
-      val words = (0 until 6).map(j => s"w${(i + j * 5) % 11}").mkString(" ")
-      val v = Array.tabulate(8)(d => (math.cos(i * (d + 1) * 0.9) +
-        rnd.nextDouble() * 0.1).toFloat)
-      (i.toLong, words, v)
-    }
-    val docs = rows.map(t => (t._1, t._2)).toDF("doc_id", "text")
-    val emb = rows.map(t => (t._1, t._3)).toDF("vec_id", "embedding")
-    val (km, assigned) = SimilarityOps.ivfIndex(emb, nlist = 5)
-    def dense() = SimilarityOps.ivfTopKWith(km, assigned,
-      emb.filter($"vec_id" < 3), 10, nprobe = 3)
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("qid", "id", "fused_micro", "rank")
-      .as[(Long, Long, Long, Int)].collect().toSet
-    val seq = SearchOps.hybridRrfWith(docs, dense(), nSeeds = 3, k = 10)
-    val conc = SearchOps.hybridRrfConcurrent(docs, dense(), nSeeds = 3, k = 10)
-    assert(key(conc) == key(seq))
-  }
 }
