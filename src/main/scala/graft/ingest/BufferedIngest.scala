@@ -9,7 +9,10 @@ import graft.lineproto.LineProtocolParser.Batch
 /** Micro-batch ingest buffer (reference N12, merge_tree_service.go:179-213):
   * writers enqueue parsed batches and get a promise completed after the
   * durable flush; a ticker flushes every `saveTimeoutMs` (reference default
-  * 1 s) or immediately past `maxBufferedRows` (reference: 1 M).
+  * 1 s) or immediately past `maxBufferedRows` (reference: 1 M). Under load
+  * (a drain of >= `throughputRows`) the buffer is hot: the tick drops to
+  * `gatherMs`, and `store` wakes the flush as soon as the queued rows reach
+  * the largest drain of the current hot streak — the writer cohort is back.
   *
   * Backpressure exactly like the reference: the HTTP handler blocks on the
   * promise, so clients see 204 only after their rows hit parquet.
@@ -37,12 +40,15 @@ final class BufferedIngest(writer: IngestWriter,
     * 1 s cadence for trickle traffic (same file count, same ack-latency
     * bound, same durability contract) but when a flush drains a
     * throughput-regime volume (>= throughputRows) the next tick fires
-    * after a short gather window instead — long enough for every
-    * just-acked writer to parse and re-enqueue, so each flush still
-    * drains the full writer cohort into ONE file; the cycle becomes
-    * flush-pipeline-bound. Flushing EARLIER than the 1 s timer never
-    * violates the contract (the 1 M-row early trigger already does) —
-    * the timer is a latency/batching bound, not a throughput governor.
+    * after a short gather window instead, and `store` wakes the flush
+    * thread as soon as a cohort's worth of rows is queued again (see
+    * `cohortRows`): each flush still drains the full writer cohort into
+    * ONE file, and a hot ack no longer waits for a gather tick that
+    * fired while its body was still parsing — the gather tick is the
+    * upper bound, the cycle is parse + flush. Flushing EARLIER than the
+    * 1 s timer never violates the contract (the 1 M-row early trigger
+    * already does) — the timer is a latency/batching bound, not a
+    * throughput governor.
     * The tick never dies: a throwing flush (promises already failed per
     * group inside) still reschedules — a dead ticker is silent data
     * loss for every later enqueue (MergeScheduler makes the same
@@ -54,6 +60,25 @@ final class BufferedIngest(writer: IngestWriter,
     * miss — measured as occasional 1.1 s gaps between 0.6 s cycles. */
   private val HotRetries = 5
   private var hotStreak = 0 // scheduler-thread-only state
+  /** The next booked tick (written and read on the scheduler thread
+    * only): an arrival wake cancels it and ticks at once. */
+  private var nextTick: java.util.concurrent.ScheduledFuture[_] = _
+
+  /** Arrival trigger: the largest drain of the current hot streak, 0 when
+    * cold. Only the scheduler thread writes it; `store` reads it. A largest
+    * drain, not the last: a gather tick that caught part of the cohort
+    * must not shrink the threshold to one body per file. Reset when the
+    * streak ends, so a cohort that really shrank waits at most one
+    * streak's gather ticks. */
+  @volatile private var cohortRows = 0L
+
+  /** On the scheduler thread: tick now if the queued rows still reach the
+    * cohort (an earlier tick may have drained them since the wake was
+    * submitted). The cancel fails only when close() left no tick booked. */
+  private def wake(): Unit = {
+    val cohort = cohortRows
+    if (cohort > 0 && buffered.get() >= cohort && nextTick.cancel(false)) tick()
+  }
 
   private def tick(): Unit =
     // the reschedule lives in a FINALLY (review r15): the NonFatal catch
@@ -74,17 +99,36 @@ final class BufferedIngest(writer: IngestWriter,
           System.err.println(s"[graft-ingest] flush failed: $e")
           0L
         }
-      if (drained >= throughputRows) hotStreak = HotRetries
+      if (drained >= throughputRows) {
+        hotStreak = HotRetries
+        cohortRows = math.max(cohortRows, drained)
+      }
       else if (drained > 0) hotStreak = 0 // trickle: keep the 1 s file shape
       else if (hotStreak > 0) hotStreak -= 1
+      if (hotStreak == 0) cohortRows = 0L
     } finally {
-      val delay = if (hotStreak > 0) gatherMs else saveTimeoutMs
-      try scheduler.schedule({ () => tick() }: Runnable, delay, TimeUnit.MILLISECONDS)
+      // a store that read the cohort before this tick set it sent no
+      // wake, but its rows are already counted in `buffered`
+      val cohort = cohortRows
+      val delay = if (cohort > 0 && buffered.get() >= cohort) 0L
+        else if (hotStreak > 0) gatherMs else saveTimeoutMs
+      try nextTick = scheduler.schedule({ () => tick() }: Runnable, delay, TimeUnit.MILLISECONDS)
       catch { case _: java.util.concurrent.RejectedExecutionException => () } // closing
     }
-  scheduler.schedule({ () => tick() }: Runnable, saveTimeoutMs, TimeUnit.MILLISECONDS)
+  // booked from the scheduler thread, like every later tick: nextTick
+  // is that thread's alone
+  scheduler.execute { () =>
+    nextTick = scheduler.schedule({ () => tick() }: Runnable, saveTimeoutMs, TimeUnit.MILLISECONDS)
+  }
 
   @volatile private var closed = false
+
+  /** Run `task` on the flush thread; after close() flush here instead. */
+  private def onFlushThread(task: Runnable): Unit =
+    try scheduler.execute(task)
+    catch { // shutdown raced between the closed check and the submit
+      case _: java.util.concurrent.RejectedExecutionException => flush()
+    }
 
   def store(batch: Batch): Future[Unit] = {
     // fail fast after close(): the ticker is gone, so an enqueued batch
@@ -95,7 +139,8 @@ final class BufferedIngest(writer: IngestWriter,
       return Future.failed(new IllegalStateException("BufferedIngest is closed"))
     val p = Promise[Unit]()
     queue.add(Pending(batch, p))
-    val big = buffered.addAndGet(batch.size.toLong) >= maxBufferedRows
+    val queued = buffered.addAndGet(batch.size.toLong)
+    val cohort = cohortRows
     // re-check AFTER the add: a close() racing past the first check
     // drains the queue once — if we now read closed=true, our add may
     // have landed after that drain, so flush ourselves (idempotent,
@@ -105,11 +150,8 @@ final class BufferedIngest(writer: IngestWriter,
     // order could silently drop the rows and park the caller for the
     // full ack timeout.
     if (closed) flush()
-    else if (big)
-      try scheduler.execute(() => flush())
-      catch { // shutdown raced between the check and the submit
-        case _: java.util.concurrent.RejectedExecutionException => flush()
-      }
+    else if (queued >= maxBufferedRows) onFlushThread(() => flush())
+    else if (cohort > 0 && queued >= cohort) onFlushThread(() => wake())
     p.future
   }
 

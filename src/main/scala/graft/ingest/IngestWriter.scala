@@ -75,7 +75,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
 
   /** Line-proto batch → flat UnsafeRow chunks in `schema`, the table's
     * full catalog column order: columns the batch lacks stay null and
-    * `__timestamp` is the flush's one arrival stamp. The flush thread's
+    * `__timestamp` is the flush's one arrival stamp. Each chunk carries
+    * its `time` range for the manifest entry. The flush thread's
     * idle cores build the chunks in parallel (fork-join over disjoint
     * row ranges, one codegen'd UnsafeProjection per chunk — instances
     * are not thread-safe, the generated class is cached). */
@@ -96,6 +97,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       val scratch = new GenericInternalRow(width)
       var bytes = new Array[Byte](math.max(64, (hi - lo) * 64))
       val offsets = new Array[Int](hi - lo + 1)
+      var tMin = Long.MaxValue
+      var tMax = Long.MinValue
       var pos = 0
       var i = lo
       while (i < hi) {
@@ -114,6 +117,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
           })
         }
         scratch.update(timeIdx, line.timeNs)
+        tMin = math.min(tMin, line.timeNs)
+        tMax = math.max(tMax, line.timeNs)
         scratch.update(tsIdx, tsNs)
         val r = proj(scratch)
         val sz = r.getSizeInBytes
@@ -124,7 +129,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
         offsets(i - lo + 1) = pos
         i += 1
       }
-      RowChunk(offsets, if (pos == bytes.length) bytes else java.util.Arrays.copyOf(bytes, pos))
+      RowChunk(offsets, if (pos == bytes.length) bytes else java.util.Arrays.copyOf(bytes, pos),
+        tMin, tMax)
     }
 
     val chunks = math.max(1, math.min(spark.sparkContext.defaultParallelism,
@@ -209,7 +215,9 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
 
   /** Store one parsed batch: evolve schema (first-type-wins), stamp
     * `__timestamp`, write the flush's one sorted file in this thread,
-    * index. Returns URIs written. */
+    * index. The manifest entry comes from what the flush already holds
+    * (row count, the one stamp, the chunks' `time` ranges), not from
+    * re-reading the file's footer. Returns URIs written. */
   def store(batch: Batch): Seq[String] = {
     // the engine OWNS __timestamp (the arrival stamp below): a client
     // field/tag of that name would silently lose its values to the
@@ -226,7 +234,10 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     val tsNs = nowNs()
     val chunks = toRowChunks(batch, schema, tsNs)
     mark("convert")
-    staged(spec, mark) { staging =>
+    // the stats a footer read of this file returns
+    val stats = ParquetStats.Stats(batch.size.toLong, tsNs, tsNs,
+      Map("time" -> (chunks.map(_.minTime).min, chunks.map(_.maxTime).max)))
+    staged(spec, mark, Some(stats)) { staging =>
       val dir = if (spec.engine != "HiveMerge") staging
         else new HPath(staging, IngestWriter.partitionDir(tsNs,
           spark.sessionState.conf.sessionLocalTimeZone))
@@ -339,13 +350,16 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
 
   /** Run `stage` into a fresh `tmp/{uuid}` staging dir, then publish
     * every staged parquet file under its reference-style name and
-    * commit the manifests. Local tables: atomic move. Object-store
-    * tables (spec.dataUrl): bytes are copied to their FINAL key and the
+    * commit the manifests. `known` is the stats of a stage that writes
+    * one file; without it the entries come from the staged footers.
+    * Local tables: atomic move. Object-store tables (spec.dataUrl):
+    * bytes are copied to their FINAL key and the
     * metadata.json manifest is the commit — no rename exists on S3
     * (reference save_service_s3.go:55-88). Staging runs on the Hadoop
     * FileSystem API, not java.nio, so a Spark write on a cluster can
     * stage on shared HDFS/s3a: only the table root URI changes. */
-  private def staged(spec: TableSpec, mark: String => Unit)(stage: HPath => Unit): Seq[String] = {
+  private def staged(spec: TableSpec, mark: String => Unit,
+                     known: Option[ParquetStats.Stats] = None)(stage: HPath => Unit): Seq[String] = {
     val tableDir = catalog.tableDir(spec.database, spec.name)
     val hconf = spark.sparkContext.hadoopConfiguration
     val tableUri = new HPath(tableDir.toUri)
@@ -363,25 +377,30 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     // dataUri-based readers and the GC deleter could never find
     val remoteRoot = ObjectStore.tableRemoteRoot(spark, spec)
     val stagingStr = staging.toString
-    val written = {
-      val it = fs.listFiles(staging, true)
-      val buf = Vector.newBuilder[HPath]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-          buf += st.getPath
+    // listStatus, not listFiles: a LocatedFileStatus copies each entry's
+    // permissions, which Hadoop's local FS without its native library
+    // loads by running `ls -ld` per file and dir — a process spawn each
+    def parquetUnder(dir: HPath): Vector[(HPath, Long)] =
+      fs.listStatus(dir).toVector.flatMap { st =>
+        if (st.isDirectory) parquetUnder(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Vector(st.getPath -> st.getLen)
+        else Vector.empty
       }
-      buf.result()
-    }
+    val written = parquetUnder(staging)
     // final names up front: footer stats read the STAGED bytes (publish
     // never rewrites them), for all files at once
-    val planned = written.map { part =>
+    val planned = written.map { case (part, _) =>
       val rel = part.getParent.toString.stripPrefix(stagingStr)
         .stripPrefix("/") // "" or date=../hour=..
       (part, rel, s"${UUID.randomUUID()}.1.parquet")
     }
-    val entries: Map[String, FileEntry] = ParquetStats.manifestEntries(
-      spark, planned.map { case (p, _, name) => (p.toString, name) })
+    val entries: Map[String, FileEntry] = known match {
+      case Some(stats) =>
+        require(written.size == 1, s"${written.size} files staged for one set of stats")
+        Map(planned.head._3 -> ParquetStats.entry(planned.head._3, written.head._2, stats))
+      case None => ParquetStats.manifestEntries(
+        spark, planned.map { case (p, _, name) => (p.toString, name) })
+    }
     mark("stats")
     // published-but-not-yet-committed URIs: a failure before the
     // manifest commit would leak final-key objects no manifest or drop
@@ -432,8 +451,10 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
 
 object IngestWriter {
   /** One driver-built conversion chunk: `count` UnsafeRows concatenated
-    * in `bytes`, row i spanning [offsets(i), offsets(i+1)). */
-  private[ingest] final case class RowChunk(offsets: Array[Int], bytes: Array[Byte]) {
+    * in `bytes`, row i spanning [offsets(i), offsets(i+1)), and the
+    * min/max of their `time`. */
+  private[ingest] final case class RowChunk(offsets: Array[Int], bytes: Array[Byte],
+                                            minTime: Long, maxTime: Long) {
     def count: Int = offsets.length - 1
     def point(r: UnsafeRow, i: Int): UnsafeRow = {
       r.pointTo(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + offsets(i),
@@ -465,18 +486,24 @@ object ParquetStats {
   final case class Stats(rowCount: Long, minTime: Long, maxTime: Long,
                          colRanges: Map[String, (Long, Long)] = Map.empty)
 
-  /** Manifest entry for a published file — the ONE place encoding the
-    * stats invariants (min_time/max_time = server __timestamp arrival
-    * stats; data_min/max_time = client `time` stats, unbounded when the
-    * column is absent). Used by both ingest and compaction so the two
-    * can never drift. */
+  /** Manifest entry for a published file, from its footer. `entry` is
+    * the ONE place encoding the stats invariants (min_time/max_time =
+    * server __timestamp arrival stats; data_min/max_time = client `time`
+    * stats, unbounded when the column is absent), used by ingest and
+    * compaction alike so the two can never drift. */
   def manifestEntry(conf: Configuration, uri: String, name: String): FileEntry = {
-    val stats = read(conf, uri, "__timestamp", extraCols = Seq("time"))
-    val (dmin, dmax) = stats.colRanges.getOrElse("time", (Long.MinValue, Long.MaxValue))
     val p = new HPath(uri)
+    entry(name, p.getFileSystem(conf).getFileStatus(p).getLen,
+      read(conf, uri, "__timestamp", extraCols = Seq("time")))
+  }
+
+  /** The entry of a `sizeBytes` file named `name` whose `__timestamp`
+    * stats and `time` range are `stats`: a footer read's, or the ones
+    * the buffered flush already holds (IngestWriter.store). */
+  def entry(name: String, sizeBytes: Long, stats: Stats): FileEntry = {
+    val (dmin, dmax) = stats.colRanges.getOrElse("time", (Long.MinValue, Long.MaxValue))
     FileEntry(
-      id = 0, path = name,
-      sizeBytes = p.getFileSystem(conf).getFileStatus(p).getLen,
+      id = 0, path = name, sizeBytes = sizeBytes,
       rowCount = stats.rowCount,
       chunkTime = stats.minTime,
       minTime = stats.minTime, maxTime = stats.maxTime,
@@ -487,7 +514,7 @@ object ParquetStats {
     manifestEntry(spark.sparkContext.hadoopConfiguration, uri, name)
 
   /** Threshold below which footer stats are read inline on the driver:
-    * the buffered-HTTP flush path publishes 1-2 files and a Spark job's
+    * an HTTP DataFrame write (NDJSON) publishes 1-2 files and a Spark job's
     * scheduling round-trip would only add flush latency. Above it (the
     * streaming firehose path: T tasks × P hour-partitions files) stats
     * are gathered by ONE Spark job with the footer opens running in

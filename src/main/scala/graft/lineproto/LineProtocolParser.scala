@@ -61,7 +61,8 @@ object LineProtocolParser {
       tags: Vector[(String, String)],
       fields: Vector[(String, Any, FieldType)],
       timeNs: Long) {
-    def schemaId: Long = {
+    /** Computed once per line: batch grouping compares it line by line. */
+    val schemaId: Long = {
       var acc = 0L
       tags.foreach { case (k, _) => acc += entryHash(k, FieldType.Str) }
       fields.foreach { case (k, _, t) => acc += entryHash(k, t) }
@@ -105,10 +106,11 @@ object LineProtocolParser {
     def hasNext: Boolean = it.hasNext
     def next(): Batch = {
       val first = it.head
-      val key = (first.database, first.table, first.schemaId)
       val buf = Vector.newBuilder[Line]
-      while (it.hasNext && (it.head.database, it.head.table, it.head.schemaId) == key)
-        buf += it.next()
+      while (it.hasNext && {
+        val h = it.head
+        h.schemaId == first.schemaId && h.table == first.table && h.database == first.database
+      }) buf += it.next()
       val rows = buf.result()
       // Dedupe names: a tag and a field of the same name (schema-id-equal
       // by design) must yield ONE column — the field's value/type wins,
@@ -238,7 +240,13 @@ object LineProtocolParser {
     // ("C:\temp" must not become "C:temp").
     def scanIdent(stopAtComma: Boolean, stopAtSpace: Boolean,
                   stopAtEq: Boolean = false): String = {
-      val sb = new StringBuilder
+      def stop(c: Char) = (stopAtComma && c == ',') || (stopAtSpace && c == ' ') ||
+        (stopAtEq && c == '=')
+      // no backslash before the stop: the identifier is a plain substring
+      val start = i
+      while (!atEnd && line.charAt(i) != '\\' && !stop(line.charAt(i))) i += 1
+      if (atEnd || line.charAt(i) != '\\') return line.substring(start, i)
+      val sb = new StringBuilder(line.substring(start, i))
       var done = false
       while (!done && !atEnd) {
         val c = line.charAt(i)
@@ -246,8 +254,7 @@ object LineProtocolParser {
             ",= \\".indexOf(line.charAt(i + 1)) >= 0) {
           sb += line.charAt(i + 1); i += 2
         }
-        else if ((stopAtComma && c == ',') || (stopAtSpace && c == ' ') ||
-          (stopAtEq && c == '=')) done = true
+        else if (stop(c)) done = true
         else { sb += c; i += 1 }
       }
       sb.result()

@@ -79,6 +79,91 @@ class ConcurrentIngestSpec extends SparkSpec {
     } finally buffer.close()
   }
 
+  private def parquetFiles(root: java.nio.file.Path, table: String): Int = {
+    val dir = root.resolve(s"default/$table")
+    if (!Files.exists(dir)) 0
+    else Files.walk(dir).filter(_.toString.endsWith(".parquet")).count().toInt
+  }
+
+  test("a hot writer's next ack does not wait for a gather tick") {
+    val root = Files.createTempDirectory("graft-arrive-")
+    val cat = new TableCatalog(root.toString)
+    // gather 2 s: only the arrival trigger can ack the second body sooner
+    val buffer = new BufferedIngest(new IngestWriter(spark, root.toString, cat),
+      saveTimeoutMs = 500L, gatherMs = 2000L, throughputRows = 100L)
+    def body(from: Int) = LineProtocolParser.parse(
+      (from until from + 200).map(r => s"arrive v=${r}i").mkString("\n")).toVector
+    try {
+      // the first ack rides the 500 ms tick, which drains 200 >= 100: hot
+      body(0).map(buffer.store).foreach(Await.result(_, 1.minute))
+      val next = body(1000)
+      val t0 = System.nanoTime()
+      next.map(buffer.store).foreach(Await.result(_, 1.minute))
+      val ackSec = (System.nanoTime() - t0) / 1e9
+      assert(ackSec < 1.0, s"hot ack took $ackSec s (waited for the gather tick?)")
+      assert(Pruning.readTable(spark, cat, "default", "arrive").count() == 400)
+      assert(parquetFiles(root, "arrive") == 2)
+    } finally buffer.close()
+  }
+
+  test("trickle writes below throughputRows still land one file per 1 s tick") {
+    val root = Files.createTempDirectory("graft-trickle-")
+    val cat = new TableCatalog(root.toString)
+    val buffer = new BufferedIngest(new IngestWriter(spark, root.toString, cat),
+      throughputRows = 1000L)
+    try {
+      // 10 rows every 50 ms for 3 s, never waiting for an ack: about 200
+      // rows a tick, under throughputRows, so the buffer stays cold
+      val t0 = System.nanoTime()
+      val acks = (0 until 60).flatMap { b =>
+        val due = t0 + b * 50L * 1000000L
+        while (System.nanoTime() < due) Thread.sleep(1)
+        LineProtocolParser.parse((0 until 10).map(r => s"trickle v=${b * 10 + r}i")
+          .mkString("\n")).map(buffer.store).toVector
+      }
+      acks.foreach(Await.result(_, 1.minute))
+      val ticks = math.ceil((System.nanoTime() - t0) / 1e9).toInt
+      val files = parquetFiles(root, "trickle")
+      assert(files <= ticks + 1, s"$files files in $ticks s of trickle writes")
+      assert(Pruning.readTable(spark, cat, "default", "trickle").count() == 600)
+    } finally buffer.close()
+  }
+
+  test("four concurrent hot writers land about one file per round, not one per body") {
+    val root = Files.createTempDirectory("graft-cohort-")
+    val cat = new TableCatalog(root.toString)
+    // gather 1 s: a writer stalled past one gather window must not split
+    // the cohort's files on a loaded host; the wake does the flushing
+    val buffer = new BufferedIngest(new IngestWriter(spark, root.toString, cat),
+      gatherMs = 1000L, throughputRows = 100L)
+    val writers = 4
+    val rounds = 8
+    val pool = Executors.newFixedThreadPool(writers)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // every writer holds its next body until the previous one is acked
+      val done = (0 until writers).map { w =>
+        Future {
+          (0 until rounds).foreach { r =>
+            val lines = (0 until 100).map(i =>
+              s"cohort,writer=w$w v=${(w * rounds + r) * 100 + i}i")
+            LineProtocolParser.parse(lines.mkString("\n")).map(buffer.store).toVector
+              .foreach(Await.result(_, 1.minute))
+          }
+        }
+      }
+      done.foreach(Await.result(_, 2.minutes))
+      val files = parquetFiles(root, "cohort")
+      assert(files <= rounds + 1, s"$files files for $rounds rounds of $writers writers")
+      val df = Pruning.readTable(spark, cat, "default", "cohort")
+      assert(df.count() == writers * rounds * 100)
+      assert(df.select("v").distinct().count() == writers * rounds * 100)
+    } finally {
+      buffer.close()
+      pool.shutdown()
+    }
+  }
+
   test("store after close fails fast instead of hanging a dead promise") {
     val root = Files.createTempDirectory("graft-closed-")
     val cat = new TableCatalog(root.toString)

@@ -220,6 +220,50 @@ class FlushWriteSpec extends SparkSpec {
     assert(parquet.isEmpty, parquet)
   }
 
+  test("the writer-built manifest entry equals the footer-read one on random batches") {
+    val (_, cat, w) = writer()
+    cat.upsert(TableSpec("default", "obe", orderBy = Seq("host", "v"),
+      columns = Seq("host" -> "STRING", "v" -> "FLOAT64")))
+    cat.upsert(TableSpec("default", "flate", engine = "Merge", orderBy = Seq("v"),
+      columns = Seq("v" -> "FLOAT64")))
+    val rnd = new scala.util.Random(11)
+    val edges = Vector(Long.MinValue, Long.MaxValue, -1L, 0L, -t0)
+    val hosts = Vector("a", "b", "c")
+    // each table gets several flushes; round 2 adds columns b and s to
+    // the default table, so its round-3 file null-pads them
+    for {
+      table <- Seq("evo", "obe", "flate")
+      round <- 0 until 4
+    } {
+      val extra =
+        if (table == "evo" && round == 2) Vector("b" -> FieldType.Bool, "s" -> FieldType.Str)
+        else Vector.empty
+      val schema = Vector("host" -> FieldType.Str, "v" -> FieldType.F64) ++ extra :+
+        ("time" -> FieldType.I64)
+      // up to 5 chunks: each chunk tracks its own time range
+      val n = 1 + rnd.nextInt(w.ConvertChunkRows * 5)
+      val lines = Vector.tabulate(n) { i =>
+        // out-of-order times around t0, about one negative or extreme a batch
+        val time = if (rnd.nextInt(n) == 0) edges(rnd.nextInt(edges.size))
+          else t0 - rnd.nextLong(4000000000000L) + 2000000000000L
+        val fields = Vector(("v", rnd.nextInt(1000) - 500.25, FieldType.F64)) ++
+          extra.map { case (k, t) => (k, if (t == FieldType.Bool) i % 2 == 0 else s"s$i", t) }
+        Line("default", table, Vector("host" -> hosts(rnd.nextInt(hosts.size))), fields, time)
+      }
+      val uris = w.store(Batch("default", table, schema, lines))
+      assert(uris.size == 1)
+      val file = java.nio.file.Paths.get(uris.head)
+      val name = file.getFileName.toString
+      val written = graft.index.MetadataIndex.load(file.getParent, table).entries(name)
+      val footer = ParquetStats.manifestEntry(spark, uris.head, name)
+      assert(written.copy(id = 0) == footer, s"$table round $round")
+      assert(written.rowCount == n && written.dataMinTime == lines.map(_.timeNs).min &&
+        written.dataMaxTime == lines.map(_.timeNs).max)
+    }
+    assert(cat.get("default", "evo").get.columns.map(_._1) ==
+      Seq("host", "v", "time", "__timestamp", "b", "s"))
+  }
+
   test("a SparkListener sees zero jobs during store(batch)") {
     val sc = spark.sparkContext
     val key = "graft.flushWriteSpec"
