@@ -13,6 +13,12 @@ import graft.lineproto.LineProtocolParser.Batch
   * (a drain of >= `throughputRows`) the buffer is hot: the tick drops to
   * `gatherMs`, and `store` wakes the flush as soon as the queued rows reach
   * the largest drain of the current hot streak — the writer cohort is back.
+  * The wake pays off for a steady cohort: writers that block on their ack
+  * and send bodies of similar size each cycle (perfbench ingest_burst: one
+  * client, fixed 100k-row bodies). When writers leave or bodies shrink,
+  * acks fall back to the gather tick until the threshold comes down (see
+  * `cohortRows`); no benchmark workload has churning writers or bodies
+  * whose size varies.
   *
   * Backpressure exactly like the reference: the HTTP handler blocks on the
   * promise, so clients see 204 only after their rows hit parquet.
@@ -66,11 +72,18 @@ final class BufferedIngest(writer: IngestWriter,
 
   /** Arrival trigger: the largest drain of the current hot streak, 0 when
     * cold. Only the scheduler thread writes it; `store` reads it. A largest
-    * drain, not the last: a gather tick that caught part of the cohort
-    * must not shrink the threshold to one body per file. Reset when the
-    * streak ends, so a cohort that really shrank waits at most one
-    * streak's gather ticks. */
+    * drain, not the last: one gather tick that caught part of the cohort
+    * must not shrink the threshold to one body per file. It comes down in
+    * two ways. The streak ends (a trickle drain, or HotRetries empty
+    * ticks): reset to 0. Or ShrinkAfter gather ticks in a row drain less
+    * than it while still hot — under steady load the streak never ends,
+    * so this is how a writer that left or bodies that got smaller are
+    * noticed: it drops to the largest of those drains, and the acks that
+    * paid the gather tick meanwhile are ShrinkAfter cycles' worth. */
   @volatile private var cohortRows = 0L
+  private val ShrinkAfter = 2
+  private var shortDrains = 0 // scheduler-thread-only, like hotStreak
+  private var shortMax = 0L
 
   /** On the scheduler thread: tick now if the queued rows still reach the
     * cohort (an earlier tick may have drained them since the wake was
@@ -101,11 +114,18 @@ final class BufferedIngest(writer: IngestWriter,
         }
       if (drained >= throughputRows) {
         hotStreak = HotRetries
-        cohortRows = math.max(cohortRows, drained)
+        // a wake drains at least the cohort, so a short drain is a gather
+        // tick: the cohort was late, or it shrank
+        if (drained >= cohortRows) { cohortRows = drained; shortDrains = 0; shortMax = 0L }
+        else {
+          shortDrains += 1
+          shortMax = math.max(shortMax, drained)
+          if (shortDrains == ShrinkAfter) { cohortRows = shortMax; shortDrains = 0; shortMax = 0L }
+        }
       }
       else if (drained > 0) hotStreak = 0 // trickle: keep the 1 s file shape
       else if (hotStreak > 0) hotStreak -= 1
-      if (hotStreak == 0) cohortRows = 0L
+      if (hotStreak == 0) { cohortRows = 0L; shortDrains = 0; shortMax = 0L }
     } finally {
       // a store that read the cohort before this tick set it sent no
       // wake, but its rows are already counted in `buffered`

@@ -164,6 +164,43 @@ class ConcurrentIngestSpec extends SparkSpec {
     }
   }
 
+  test("when one of four hot writers stops, the other three's acks stop waiting for the gather tick") {
+    val root = Files.createTempDirectory("graft-shrink-")
+    val cat = new TableCatalog(root.toString)
+    // gather 2 s: an ack under 1 s can only come from the arrival trigger
+    val gather = 2000L
+    val buffer = new BufferedIngest(new IngestWriter(spark, root.toString, cat),
+      gatherMs = gather, throughputRows = 100L)
+    val (before, after) = (3, 6)
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // writer 3 stops after `before` rounds; the threshold learned from
+      // four writers' drains must come down to three writers' drains
+      val acks = (0 until 4).map { w =>
+        Future {
+          (0 until (if (w == 3) before else before + after)).map { r =>
+            val lines = (0 until 100).map(i => s"shrink,writer=w$w v=${(w * 100 + r) * 100 + i}i")
+            val t0 = System.nanoTime()
+            LineProtocolParser.parse(lines.mkString("\n")).map(buffer.store).toVector
+              .foreach(Await.result(_, 1.minute))
+            (System.nanoTime() - t0) / 1e9
+          }
+        }
+      }.map(Await.result(_, 2.minutes))
+      // the first rounds after the stop wait for gather ticks while the
+      // threshold comes down; one more round of slack, then all fast
+      val late = acks.take(3).flatMap(_.drop(before + 3))
+      assert(late.size == 9 && late.forall(_ < gather / 2000.0),
+        s"acks after the threshold came down: $late")
+      assert(Pruning.readTable(spark, cat, "default", "shrink").count() ==
+        (3 * (before + after) + before) * 100)
+    } finally {
+      buffer.close()
+      pool.shutdown()
+    }
+  }
+
   test("store after close fails fast instead of hanging a dead promise") {
     val root = Files.createTempDirectory("graft-closed-")
     val cat = new TableCatalog(root.toString)

@@ -1037,16 +1037,11 @@ class GigHttpServerSpec extends SparkSpec {
   }
 
   test("background merge scheduler compacts 1s-flush files to L2 unattended") {
-    // dedicated server: 5 s ticker, zero drop grace (reference RunMerge
-    // 10 s ticker, registry.go:42-62 — scaled down for the test). The
-    // first tick comes after the six writes: a tick between the fifth
-    // and sixth flush would merge the first five and leave the sixth
-    // alone at L1, which compaction never merges by itself (1-file
-    // plans), and a 200 ms ticker's L2 merges deleted files under the
-    // final query at zero grace; each failed about every other run.
+    // dedicated server: fast ticker, zero drop grace (reference RunMerge
+    // 10 s ticker, registry.go:42-62 — scaled down for the test)
     val root2 = Files.createTempDirectory("graft-merge-").toString
     val s2 = new GigHttpServer(spark, root2, port = 0, saveTimeoutMs = 50,
-      mergeIntervalMs = 5000, dropGraceMs = 0).start()
+      mergeIntervalMs = 200, dropGraceMs = 0).start()
     try {
       val b2 = s"http://localhost:${s2.boundPort}"
       (1 to 6).foreach { i =>
@@ -1062,7 +1057,8 @@ class GigHttpServerSpec extends SparkSpec {
       val before = liveFiles()
       assert(before.size > 1, s"need many small files, got $before")
       // no manual compact call: the scheduler must drain every L1 file
-      // into L2 and shrink the live set
+      // into L2 and shrink the live set (L1 merges happen mid-ingest too,
+      // so `before` may already contain L2 files)
       val deadline = System.currentTimeMillis() + 20000
       var files = before
       while (System.currentTimeMillis() < deadline &&
