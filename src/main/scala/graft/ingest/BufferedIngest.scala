@@ -78,8 +78,9 @@ final class BufferedIngest(writer: IngestWriter,
     * ticks): reset to 0. Or ShrinkAfter gather ticks in a row drain less
     * than it while still hot — under steady load the streak never ends,
     * so this is how a writer that left or bodies that got smaller are
-    * noticed: it drops to the largest of those drains, and the acks that
-    * paid the gather tick meanwhile are ShrinkAfter cycles' worth. */
+    * noticed: it drops to the largest of those drains. A cohort that
+    * shrank costs ShrinkAfter gather-tick waits, then the wake fires
+    * again. */
   @volatile private var cohortRows = 0L
   private val ShrinkAfter = 2
   private var shortDrains = 0 // scheduler-thread-only, like hotStreak

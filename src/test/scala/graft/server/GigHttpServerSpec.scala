@@ -1056,6 +1056,29 @@ class GigHttpServerSpec extends SparkSpec {
         .flatMap(d => graft.index.MetadataIndex.load(d, "sched").entries.keys)
       val before = liveFiles()
       assert(before.size > 1, s"need many small files, got $before")
+      // a file that lands after the last L1 merge was planned waits alone
+      // at L1 by design (Compactor skips 1-file plans; perfbench's
+      // `settled` relies on it) until the next flush gives it a partner.
+      // Once the acked writes settle, at most one L1 file is left; if
+      // one is, it must be the newest, and one more write must drain it
+      def level1() = graft.index.MetadataIndex.partitionDirs(tdir).flatMap { d =>
+        graft.index.MetadataIndex.load(d, "sched").entries.values
+      }.partition(_.path.endsWith(".1.parquet"))
+      val settleBy = System.currentTimeMillis() + 20000
+      var split = level1()
+      while (System.currentTimeMillis() < settleBy && split._1.size > 1) {
+        Thread.sleep(200); split = level1()
+      }
+      val (l1, rest) = split
+      assert(l1.size <= 1, s"L1 merges must keep up: ${l1.map(_.path)}")
+      l1.foreach { lone =>
+        assert(rest.forall(_.maxTime < lone.minTime),
+          s"only the newest file may wait alone at L1: $lone vs $rest")
+        val r = client.send(HttpRequest.newBuilder(URI.create(s"$b2/write"))
+          .POST(HttpRequest.BodyPublishers.ofString("sched v=0i")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 204)
+      }
       // no manual compact call: the scheduler must drain every L1 file
       // into L2 and shrink the live set (L1 merges happen mid-ingest too,
       // so `before` may already contain L2 files)
