@@ -23,14 +23,16 @@ object GraftSession {
   /** `base` with the profile applied to every key it does not set:
     * master `SPARK_MASTER` or `local[cores]`, `cores` shuffle partitions,
     * UTC session time zone (Tables.load's timestamp conversion assumes
-    * it), no UI. Everything else, AQE included, stays at Spark's
-    * defaults. */
+    * it), no UI, and `PosixLocalFileSystem` for `file:` (no `chmod`
+    * fork per local create). Everything else, AQE included, stays at
+    * Spark's defaults. */
   def conf(base: SparkConf, cores: Int): SparkConf =
     base
       .setIfMissing("spark.master", sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
       .setIfMissing("spark.sql.shuffle.partitions", cores.toString)
       .setIfMissing("spark.sql.session.timeZone", "UTC")
       .setIfMissing("spark.ui.enabled", "false")
+      .setIfMissing("spark.hadoop.fs.file.impl", classOf[PosixLocalFileSystem].getName)
 
   def apply(appName: String, cores: Int = cores): SparkSession = {
     val spark = SparkSession.builder()

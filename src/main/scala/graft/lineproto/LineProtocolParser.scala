@@ -8,7 +8,9 @@ import scala.util.hashing.MurmurHash3
   *
   * Pure Scala, zero Spark dependencies: unit/property-testable, and usable
   * both driver-side (HTTP ingest) and inside executors (flatMap over a
-  * text stream) — the parse itself is embarrassingly parallel at 100 TB.
+  * text stream). Lines parse independently, so a large body is cut at
+  * `\n` into slices that parse on every core (`parse`); only the batch
+  * grouping runs in line order.
   *
   * Semantics mirrored from the reference:
   *  - `db.table` measurement prefix selects the database
@@ -89,16 +91,67 @@ object LineProtocolParser {
   final case class ParseException(lineNo: Int, msg: String)
       extends RuntimeException(s"line $lineNo: $msg")
 
+  /** Characters per parse slice. A body shorter than two slices parses
+    * on the calling thread; a longer one in `length / SliceChars` slices,
+    * at most one per core. About 1 MiB, so a slice's parse (tens of ms)
+    * dwarfs handing it to a pool thread. */
+  val SliceChars: Int = 1 << 20
+
+  /** The body's batches, in line order. The text is cut after a `\n`
+    * into slices that parse in parallel on the common fork-join pool
+    * (`nowNs` may be called from several threads at once); their lines
+    * then group into batches in order. A malformed body throws the
+    * `ParseException` of its first malformed line, numbered over the
+    * whole body with blank and `#` lines counted. */
   def parse(
       text: String,
       precision: Precision = Precision.Ns,
       defaultDb: String = "default",
-      nowNs: () => Long = () => System.currentTimeMillis() * 1000000L): Iterator[Batch] = {
-    val lines = text.linesIterator.zipWithIndex
-      .map { case (l, i) => (l.trim, i + 1) }
-      .filter { case (l, _) => l.nonEmpty && !l.startsWith("#") }
-      .map { case (l, i) => parseLine(l, i, precision, defaultDb, nowNs) }
-    groupBatches(lines)
+      nowNs: () => Long = () => System.currentTimeMillis() * 1000000L): Iterator[Batch] =
+    parseSliced(text, math.min(Runtime.getRuntime.availableProcessors, text.length / SliceChars),
+      precision, defaultDb, nowNs)
+
+  /** Where `text` is cut into (at most) `slices` slices: 0, one offset
+    * just past the first `\n` at or after each k/slices of the text, and
+    * the length; an empty text has no slice. */
+  private[lineproto] def sliceBounds(text: String, slices: Int): IndexedSeq[Int] = {
+    val n = math.max(1, slices)
+    (0 +: (1 until n).map { k =>
+      val nl = text.indexOf('\n', (text.length.toLong * k / n).toInt)
+      if (nl < 0) text.length else nl + 1
+    } :+ text.length).distinct
+  }
+
+  private[lineproto] def parseSliced(text: String, slices: Int, precision: Precision,
+                                     defaultDb: String, nowNs: () => Long): Iterator[Batch] = {
+    val bounds = sliceBounds(text, slices)
+    val parsed = new Array[Either[ParseException, (Vector[Line], Int)]](bounds.length - 1)
+    def run(k: Int): Unit = parsed(k) =
+      try Right(parseSlice(text.substring(bounds(k), bounds(k + 1)), precision, defaultDb, nowNs))
+      catch { case e: ParseException => Left(e) }
+    if (parsed.length == 1) run(0)
+    else java.util.stream.IntStream.range(0, parsed.length).parallel().forEach(k => run(k))
+    var offset = 0
+    val lines = parsed.map {
+      case Left(e) => throw e.copy(lineNo = offset + e.lineNo)
+      case Right((ls, count)) => offset += count; ls
+    }
+    groupBatches(lines.iterator.flatten)
+  }
+
+  /** One slice's parsed lines and its line count. A slice ends after a
+    * `\n` (or at the end of the body), so its lines are exactly the
+    * body's lines in that range. */
+  private def parseSlice(text: String, precision: Precision, defaultDb: String,
+                         nowNs: () => Long): (Vector[Line], Int) = {
+    val out = Vector.newBuilder[Line]
+    var no = 0
+    text.linesIterator.foreach { raw =>
+      no += 1
+      val l = raw.trim
+      if (l.nonEmpty && !l.startsWith("#")) out += parseLine(l, no, precision, defaultDb, nowNs)
+    }
+    (out.result(), no)
   }
 
   private def groupBatches(lines: Iterator[Line]): Iterator[Batch] = new Iterator[Batch] {

@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{ByteArrayOutputStream, InputStream}
+import java.io.InputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
@@ -948,17 +948,9 @@ final class GigHttpServer(spark: SparkSession, root: String,
         .exists(_.toLowerCase.contains("gzip")))
         new GZIPInputStream(ex.getRequestBody)
       else ex.getRequestBody
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var total = 0L
-    var n = raw.read(buf)
-    while (n >= 0) {
-      total += n
-      if (total > MaxBodyBytes) throw new BodyTooLarge
-      out.write(buf, 0, n)
-      n = raw.read(buf)
-    }
-    out.toByteArray
+    val body = raw.readNBytes(MaxBodyBytes.toInt + 1)
+    if (body.length > MaxBodyBytes) throw new BodyTooLarge
+    body
   }
 
   private def queryParams(ex: HttpExchange): Map[String, String] =

@@ -81,9 +81,7 @@ object StreamIngest {
       // and checkpoint replay re-delivers the same file — a permanent
       // crash-loop on one bad line; the coerce() discipline, extended
       // from cell level to line level).
-      // parse() is LAZY — materialize inside the try or the exception
-      // escapes into the downstream iteration (the spec caught exactly
-      // that); `text` is one landing line (the .text() source is
+      // `text` is one landing line (the .text() source is
       // row-per-line), so the vector is one batch
       (try LineProtocolParser.parse(text, defaultDb = db).toVector
        catch { case scala.util.control.NonFatal(_) => Vector.empty })

@@ -22,7 +22,14 @@ class GraftSessionSpec extends SparkSpec {
     assert(c.get("spark.sql.shuffle.partitions") == "3")
     assert(c.get("spark.sql.session.timeZone") == "UTC")
     assert(c.get("spark.ui.enabled") == "false")
-    assert(c.getAll.length == 4)
+    assert(c.get("spark.hadoop.fs.file.impl") == classOf[PosixLocalFileSystem].getName)
+    assert(c.getAll.length == 5)
+  }
+
+  test("conf keeps a file: implementation already in the base conf") {
+    val stock = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
+    val c = GraftSession.conf(bare.set("spark.hadoop.fs.file.impl", stock), cores = 3)
+    assert(c.get("spark.hadoop.fs.file.impl") == stock)
   }
 
   test("SPARK_GRAFT_CPUS parsing: set wins, unset falls back to availableProcessors") {

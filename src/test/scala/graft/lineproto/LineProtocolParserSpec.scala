@@ -146,4 +146,73 @@ class LineProtocolParserSpec extends AnyFunSuite {
       assert(b.rows.head.fields.map(_._3) == fields.map(_._3))
     }
   }
+
+  // ---- sliced parse: every line kind at every slice cut ----
+
+  private val Width = 72
+  private def pad(head: String, tail: String): String =
+    head + "x" * (Width - head.length - tail.length) + tail
+  // every kind renders exactly Width chars, so swapping one line's kind
+  // leaves every slice cut where it was
+  private def render(kind: Int, i: Int): String = kind match {
+    case 0 => pad("cpu,pad=", f" v=${i}%07di,u=${i % 97}u 17000000000${i}%08d")
+    case 1 => pad("cpu,pad=", f" v=$i%07d.5,u=${i % 97}u 17000000000${i}%08d") // schema change
+    case 2 => pad("otherdb.mem,pad=", f" v=${i}%07di,u=${i % 97}u") // db/table change, no time
+    case 3 => pad("""my\ table,ta\,g=va\ lue,pad=""", " s=\"q\\\"" + f"$i%07d" + "\" 1") // escapes
+    case 4 => " " * Width // blank
+    case 5 => pad("#", "") // comment
+    case 6 => pad("cpu,pad=", " v=abc") // malformed
+  }
+
+  /** A seeded body of >= 3 slices, with CRLF on about every third line,
+    * and the line kinds `atCut` placed on the first line of slices 2..4
+    * of a 4-slice cut. */
+  private def slicedBody(seed: Int, atCut: Seq[Int], rows: Int = 3 * SliceChars / (Width + 1) + 1000) = {
+    val rnd = new scala.util.Random(seed)
+    val kinds = Array.fill(rows)(Seq(0, 0, 0, 0, 1, 2, 3, 4, 5)(rnd.nextInt(9)))
+    val ends = Array.fill(rows)(if (rnd.nextInt(3) == 0) "\r\n" else "\n")
+    def text = kinds.indices.map(i => render(kinds(i), i) + ends(i)).mkString
+    val starts = kinds.indices.scanLeft(0)((at, i) => at + Width + ends(i).length)
+    val bounds = sliceBounds(text, 4)
+    assert(bounds.length == 5)
+    bounds.slice(1, 4).zip(atCut).foreach { case (b, kind) => kinds(starts.indexOf(b)) = kind }
+    val body = text
+    assert(body.length >= 3 * SliceChars && sliceBounds(body, 4) == bounds)
+    (body, bounds, starts)
+  }
+
+  test("sliced parse equals the one-slice parse: cuts on schema, db/table, blank, # lines") {
+    Seq(Seq(1, 2, 3), Seq(4, 5, 0), Seq(2, 1, 4), Seq(5, 3, 1)).zipWithIndex.foreach {
+      case (atCut, seed) =>
+        val (body, _, _) = slicedBody(seed, atCut)
+        val one = parseSliced(body, 1, Precision.Ns, "default", now).toVector
+        assert(one.length > 1000 && one.map(_.database).toSet == Set("default", "otherdb"))
+        assert(one.map(_.table).toSet == Set("cpu", "mem", "my table"))
+        Seq(2, 3, 4).foreach(n =>
+          assert(parseSliced(body, n, Precision.Ns, "default", now).toVector == one, s"$n slices"))
+        assert(parse(body, nowNs = now).toVector == one)
+    }
+  }
+
+  test("sliced parse reports the first malformed line, numbered over the whole body") {
+    val (clean, bounds, starts) = slicedBody(7, Seq(0, 0, 0))
+    def lineAt(offset: Int) = starts.indexOf(offset) // 0-based
+    def breakLines(lines: Int*) = {
+      val sb = new StringBuilder(clean)
+      lines.foreach(l => sb.replace(starts(l), starts(l) + Width, render(6, l)))
+      sb.result()
+    }
+    def lineNo(body: String, slices: Int) =
+      intercept[ParseException](parseSliced(body, slices, Precision.Ns, "default", now)).lineNo
+    val third = lineAt(bounds(2)) + 5 // inside slice 3 of 4
+    val second = lineAt(bounds(1)) + 9
+    val last = lineAt(bounds(3)) + 2
+    for (body <- Seq(breakLines(third), breakLines(third, last), breakLines(second, third))) {
+      val expected = lineNo(body, 1)
+      Seq(2, 4).foreach(n => assert(lineNo(body, n) == expected, s"$n slices"))
+    }
+    assert(lineNo(breakLines(third), 4) == third + 1)
+    assert(lineNo(breakLines(last, third), 4) == third + 1)
+    assert(lineNo(breakLines(second, third), 4) == second + 1)
+  }
 }

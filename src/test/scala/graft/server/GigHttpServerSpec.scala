@@ -586,6 +586,21 @@ class GigHttpServerSpec extends SparkSpec {
     assert(q.body().contains(""""v":"7""""), q.body())
   }
 
+  test("a body that inflates past MaxBodyBytes answers 413") {
+    // half a MB of gzip that inflates to one byte over the limit
+    val bos = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    val chunk = new Array[Byte](1 << 20)
+    (0L until server.MaxBodyBytes / chunk.length).foreach(_ => gz.write(chunk))
+    gz.write(0); gz.close()
+    val req = HttpRequest.newBuilder(URI.create(s"$base/write?db=toolarge"))
+      .header("Content-Encoding", "gzip")
+      .POST(HttpRequest.BodyPublishers.ofByteArray(bos.toByteArray)).build()
+    val r = client.send(req, HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 413, r.body())
+    assert(r.body().contains("exceeds"), r.body())
+  }
+
   test("create table via reference YAML shape (F8) then JSON") {
     val yaml =
       """create_table: metrics
