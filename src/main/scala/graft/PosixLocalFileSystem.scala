@@ -12,29 +12,20 @@ import org.apache.hadoop.fs.permission.FsPermission
   * per line-protocol flush (the staging dir, the `date=`/`hour=` dirs,
   * the parquet file and its `.crc`). A mode made only of the nine rwx
   * bits is set with `Files.setPosixFilePermissions` instead; a mode with
-  * any other bit (sticky, for one), or a file system without POSIX
-  * attributes, still goes to Hadoop's own code. `GraftSession` registers
-  * the checksummed wrapper as `fs.file.impl`. */
+  * any other bit (sticky, for one) still goes to Hadoop's own code.
+  * `GraftSession` registers the checksummed wrapper as `fs.file.impl`. */
 class PosixRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val mode = permission.toShort.toInt
     if ((mode & ~0x1ff) != 0) super.setPermission(p, permission)
-    else try Files.setPosixFilePermissions(pathToFile(p).toPath, PosixLocalFileSystem.bits(mode))
-    catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+    else {
+      // declaration order is owner rwx, group rwx, others rwx: mode bit 8 down to 0
+      val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+      PosixFilePermission.values.foreach(b => if ((mode & (0x100 >> b.ordinal)) != 0) perms.add(b))
+      Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+    }
   }
 }
 
 /** `file:` with checksums, over `PosixRawLocalFileSystem`. */
 class PosixLocalFileSystem extends LocalFileSystem(new PosixRawLocalFileSystem)
-
-object PosixLocalFileSystem {
-  // PosixFilePermission's declaration order is owner rwx, group rwx,
-  // others rwx: bit 8 down to bit 0 of the mode
-  private val byBit = PosixFilePermission.values.reverse
-
-  private[graft] def bits(mode: Int): java.util.Set[PosixFilePermission] = {
-    val out = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    byBit.indices.foreach(b => if ((mode & (1 << b)) != 0) out.add(byBit(b)))
-    out
-  }
-}

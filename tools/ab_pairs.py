@@ -6,8 +6,8 @@
         [--record write_ack_p50_s --record server_cpu_s_per_request] [--log runs.jsonl]
 
 For each seed it runs `python3 perfbench/run.py --workload W --seed S
---seconds N` once in each checkout, A first on even-numbered pairs and B
-first on odd ones, so drift over the session hits both sides alike. Each
+--seconds N` once in each checkout, A first on pairs 1, 3, ... and B
+first on pairs 2, 4, ..., so drift over the session hits both sides alike. Each
 run's `record` line is appended to --log as it finishes. Then, for every
 end-to-end metric of A's BENCHMARK.json (and every --record figure), it
 prints each side's q1/median/q3 (inclusive quartiles), how many pairs B
