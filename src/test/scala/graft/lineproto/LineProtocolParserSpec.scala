@@ -207,12 +207,10 @@ class LineProtocolParserSpec extends AnyFunSuite {
     val third = lineAt(bounds(2)) + 5 // inside slice 3 of 4
     val second = lineAt(bounds(1)) + 9
     val last = lineAt(bounds(3)) + 2
-    for (body <- Seq(breakLines(third), breakLines(third, last), breakLines(second, third))) {
-      val expected = lineNo(body, 1)
-      Seq(2, 4).foreach(n => assert(lineNo(body, n) == expected, s"$n slices"))
+    for ((broken, first) <- Seq(Seq(third) -> third, Seq(third, last) -> third,
+                                Seq(second, third) -> second)) {
+      val body = breakLines(broken: _*)
+      Seq(1, 2, 4).foreach(n => assert(lineNo(body, n) == first + 1, s"$n slices"))
     }
-    assert(lineNo(breakLines(third), 4) == third + 1)
-    assert(lineNo(breakLines(last, third), 4) == third + 1)
-    assert(lineNo(breakLines(second, third), 4) == second + 1)
   }
 }
