@@ -13,10 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - per-query MEDIAN-OF-3: the measured section runs as three full
   *    rounds (round 1 carries one-time artifact builds — the cluster
   *    map, the BPE merge table — so the median reflects steady state
-  *    and round 1's build cost stays visible in BENCH_DETAIL.json);
-  *  - the ingest section runs in a FRESH SparkContext after an
-  *    explicit GC settle, so query-section heap/block-manager history
-  *    can't tax ingest throughput.
+  *    and round 1's build cost stays visible in BENCH_DETAIL.json).
+  * The write path is measured over HTTP by perfbench's ingest_burst.
   *
   * sf1 section (VERDICT r4 #8): a 10× derived corpus
   * (BenchData.ensureScaled — word-shuffled replicas, honest pair
@@ -241,7 +239,7 @@ object Bench {
     // Captured BEFORE the run: a commit landing mid-bench must not
     // relabel measurements taken on the pre-commit tree.
     val (headSha, treeDirty) = BenchGuard.gitProvenance()
-    var spark = GraftSession("graft-bench")
+    val spark = GraftSession("graft-bench")
     // ONE keep-set for every hygiene drop in this session, captured
     // BEFORE the warm pass (review r15: per-section snapshots taken
     // after warmup pinned the warm queries' orphaned checkpoints for
@@ -581,41 +579,16 @@ object Bench {
       }
     }
 
-    // --- ingest: fresh SparkContext + GC settle (query-section heap
-    //     history otherwise taxes throughput — r4 embedded numbers ran
-    //     3-5× below the standalone run of the same code) ---
-    spark.stop()
-    System.gc()
-    Thread.sleep(2000)
-    spark = GraftSession("graft-bench")
-    val ingestRows = sys.env.getOrElse("SPARK_GRAFT_INGEST_ROWS", "20000000").toLong
-    // buffered cap = 10 flush cycles (32 writers × 10k × 10), not 2:
-    // after the r13 cadence fix a cycle is ~0.5-1 s, and a 2-cycle run
-    // is all JIT/codegen warmup — it under-read the face by 2.5× vs
-    // the canonical clean-JVM 20 M run (INGEST_BENCH_20M.json stays
-    // authoritative; this embedded figure is the per-round smoke)
-    val ingest =
-      try IngestBench.run(spark, bulkRows = ingestRows, streamRows = ingestRows,
-        bufferedRows = math.min(ingestRows, 3200000L))
-      catch { case e: Throwable => s"""{"error":${graft.server.JsonOut.str(e.toString)}}""" }
-
     // --- emit: compact stdout line + full-fidelity detail file ---
     val sn = shortNames(names)
     val qs = names.map(n => "\"" + sn(n) + "\":" + r3(med(n)))
       .mkString("{", ",", "}")
     val sf1qs = sf1.map { case (n, s) => "\"" + sn.getOrElse(n, n) + "\":" + r3(s) }
       .mkString("{", ",", "}")
-    // the embedded ingest section shares the bench JVM (fresh
-    // SparkContext but end-of-session heap/GC state); the standalone
-    // run of the SAME code in a clean JVM is the authoritative number
-    // (VERDICT r5 #4: one record must be canonical — it is the file)
-    val ingestNote = "within-session measurement; canonical record: " +
-      "INGEST_BENCH_20M.json (standalone clean-JVM run of the same code)"
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,
          |"head_sha":${graft.server.JsonOut.str(headSha)},
          |"tree_dirty":${treeDirty.map(_.toString).getOrElse("null")},
-         |"ingest_note":${graft.server.JsonOut.str(ingestNote)},
          |"queries_full":${jsonObj(names.map(n => n -> med(n)))},
          |"per_rep":[${perRep.map(m => jsonObj(names.map(n => n -> m(n).sec))).mkString(",")}],
          |"per_rep_gc_sec":[${perRep.map(m =>
@@ -639,7 +612,6 @@ object Bench {
          |"sf1_flags_cleared":$clearedJson,
          |"sf1_baseline_reset":$baselineReset,
          |"sf1_data_fp":${graft.server.JsonOut.str(dataFp)},
-         |"ingest_rows_per_sec":$ingest,
          |"sf":${graft.server.JsonOut.str(sfDir)}}""".stripMargin.replace("\n", "")
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detail + "\n").getBytes("UTF-8"))
@@ -662,7 +634,7 @@ object Bench {
       r3(m.values.map(_.gcSec).sum)).mkString("[", ",", "]")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,""" +
       s""""sf1":$sf1qs,"gc_sec":$gcQs,"cpu_sec":$cpuQs,""" +
-      s""""gc_total_per_rep":$gcTotals,"ingest_rows_per_sec":$ingest,""" +
+      s""""gc_total_per_rep":$gcTotals,""" +
         s""""sf":${graft.server.JsonOut.str(sfDir)}}""")
     spark.stop()
   }

@@ -10,14 +10,20 @@ package graft
   */
 object SqlBootstrap {
   def main(args: Array[String]): Unit = {
-    val root = args.headOption.getOrElse(".")
     val spark = GraftSession("graft-sql-bootstrap")
     Tables.init(spark)
+    try run(spark, args.headOption.getOrElse("."), scala.io.Source.stdin.mkString)
+    finally spark.stop()
+  }
+
+  /** Execute `sql` statement by statement against the lakehouse at
+    * `root`, printing each result to stdout. */
+  private[graft] def run(spark: org.apache.spark.sql.SparkSession, root: String,
+                         sql: String): Unit = {
     val catalog = new graft.catalog.TableCatalog(root)
-    // same view path as /query (FileIndex-backed), so result schemas —
-    // e.g. partition column types — match the HTTP surface exactly
-    new graft.pruning.QueryViews(spark, catalog).ensure(None)
-    val sql = scala.io.Source.stdin.mkString
+    // same views as an unscoped /query (FileIndex-backed), so result
+    // schemas — e.g. partition column types — match the HTTP surface
+    new graft.pruning.QueryViews(spark, catalog).registerOn(spark, None, "default"): Unit
     // statement split on ';' outside quotes (reference splits on ';')
     splitStatements(sql).foreach { stmt =>
       // same DuckDB-dialect acceptance as /query: `expr::TYPE` casts,
@@ -49,7 +55,6 @@ object SqlBootstrap {
           }
       }
     }
-    spark.stop()
   }
 
   /** Delegates to the dialect shim's lexer-based splitter (one

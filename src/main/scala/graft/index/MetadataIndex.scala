@@ -327,15 +327,4 @@ object MetadataIndex {
     walk(tableRoot, 0)
     out.toList
   }
-
-  /** Live files overlapping [minNs, maxNs] — querier-style time pruning
-    * (reference ARCHITECTURE.md:2079). */
-  def pruneByTime(tableRoot: Path, tableName: String,
-                  minNs: Long = Long.MinValue, maxNs: Long = Long.MaxValue): Seq[Path] =
-    partitionDirs(tableRoot).flatMap { dir =>
-      val idx = load(dir, tableName)
-      idx.entries.values
-        .filter(e => e.minTime <= maxNs && e.maxTime >= minNs)
-        .map(e => dir.resolve(e.path))
-    }
 }

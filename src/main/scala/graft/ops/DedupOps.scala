@@ -462,28 +462,8 @@ object DedupOps {
     * guard: without it one hyper-frequent shingle makes the `a.s = b.s`
     * self-join quadratic on that key. `capFrac = None` gives the
     * classical uncapped Jaccard (used by minHashPairs' exact verify). */
-  /** Opt-in cost attribution (-Dgraft.dedup.costLog=1 /
-    * GRAFT_DEDUP_COST_LOG=1). The probes cost roughly one extra
-    * shingling/signature pass per call — diagnosis-only, never on in
-    * production paths by default. */
-  private def costLogEnabled: Boolean =
-    sys.props.get("graft.dedup.costLog").contains("1") ||
-      sys.env.get("GRAFT_DEDUP_COST_LOG").contains("1")
-
   def ngramJaccardPairs(docs: DataFrame, tau: Double, n: Int = 3,
                         capFrac: Option[Double] = Some(StopShingleFrac)): DataFrame = {
-    // one extra aggregation job that prints the
-    // Σdf² line BEFORE the pair join runs, so the next sf1-style blowup
-    // is attributable without reconstructing the number by hand (r7).
-    if (costLogEnabled) {
-      // empty corpus: first(cap)/sum(df²) aggregate to NULL — print zeros
-      // rather than NPE (the probe must never be the thing that fails)
-      val r = shingleCostStats(docs, n, capFrac).collect()(0)
-      def gl(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-      System.err.println(s"[graft] ngramJaccardPairs cost: cap=${gl(0)} " +
-        s"admitted_shingles=${gl(1)} dropped_shingles=${gl(2)} " +
-        s"candidate_pairs=${gl(3)} sum_df2=${gl(4)}")
-    }
     // no cache(): shingling is one cheap projection post-tokenize-fix, and
     // the self-join's two sides share one shuffle via ReuseExchange — an
     // explicit InMemoryRelation would cost more to build than it saves.
@@ -615,8 +595,7 @@ object DedupOps {
     * (each shingle group of document frequency df contributes
     * df·(df−1)/2 pairs — the pair-join's exact work upper bound), and
     * Σdf² over admitted shingles. The r7 sf1 regression (p02 20.2 s) was
-    * attributable only by reconstructing this number; now it is one call
-    * (or a flag — see ngramJaccardPairs). */
+    * attributable only by reconstructing this number; now it is one call. */
   def shingleCostStats(docs: DataFrame, n: Int = 3,
                        capFrac: Option[Double] = Some(StopShingleFrac)): DataFrame = {
     val dfs = shingles(docs, n).groupBy("s").agg(count(lit(1)).as("df"))
@@ -1131,13 +1110,6 @@ object DedupOps {
                    maxBandBucket: Option[Long] = None,
                    collapseMinCluster: Long = CollapseMinCluster,
                    knownMaxDup: Option[Long] = None): DataFrame = {
-    if (costLogEnabled) {
-      val r = bandCostStats(docs, n).collect()(0)
-      def gl(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-      System.err.println(s"[graft] minHashPairs cost: n_docs=${gl(0)} " +
-        s"n_reps=${gl(1)} buckets=${gl(2)} max_bucket=${gl(3)} " +
-        s"candidate_pairs=${gl(4)} sum_c2=${gl(5)}")
-    }
     // collapse only when a mega-cluster actually exists: the
     // collapse+expand machinery costs ~30% extra wall at a dup-FREE
     // sf1 (measured r9: 4.8 s vs 3.3 s on 50 k docs, 80 dups), while
@@ -1235,8 +1207,7 @@ object DedupOps {
     * the non-singleton (band, bh) bucket count, the deepest bucket, the
     * candidate-pair total Σ c·(c−1)/2 (the band self-join's exact work
     * bound), and Σc². Computed over collapsed representatives — what
-    * [[minHashPairs]] actually joins. Loggable via the same
-    * -Dgraft.dedup.costLog=1 flag. */
+    * [[minHashPairs]] actually joins. */
   def bandCostStats(docs: DataFrame, n: Int = 3): DataFrame = {
     val repDocs = exactReps(docs)
     val buckets = minHashSignatures(repDocs, n)
@@ -1397,9 +1368,6 @@ object DedupOps {
       edges = next
       it += 1
     }
-    if (costLogEnabled)
-      System.err.println(s"[graft] connectedComponents: rounds=$it " +
-        s"edges=${last._1}")
     if (!converged)
       throw new IllegalStateException(s"connectedComponents: no fixpoint in $maxIter rounds")
     // at the fixpoint every edge is (node, component-min); roots appear

@@ -196,33 +196,41 @@ object GraftFileIndex {
   /** Hive partition columns a HiveMerge table exposes (date=/hour= dirs).
     * DateType/IntegerType match both Spark's own hive-partition inference
     * (round-1 behavior) and DuckDB's — StringType here would silently turn
-    * `SELECT hour FROM t` from JSON number 22 into "22" over /query.
-    * Shared with Pruning.readTable's empty-table branch so EVERY read
-    * path exposes the same columns (review r15: the empty branch built a
-    * spec.columns-only schema, so `select("hour")` worked or threw
-    * depending on how much data the time range hit). */
+    * `SELECT hour FROM t` from JSON number 22 into "22" over /query. */
   def partitionSchemaFor(spec: TableSpec): StructType =
     if (spec.engine == "HiveMerge")
       StructType(Seq(StructField("date", DateType), StructField("hour", IntegerType)))
     else StructType(Nil)
 
-  /** Data schema from the catalog spec — the single spelling shared by
-    * this FileIndex relation and Pruning's empty-table branch. */
+  /** Data schema from the catalog spec. */
   def dataSchemaFor(spec: TableSpec): StructType =
     StructType(spec.columns.map { case (n, t) =>
       StructField(n, graft.catalog.GraftTypes.sparkType(t))
     })
 
   /** DataFrame over a graft table through the manifest-backed FileIndex:
-    * time + partition predicates prune files inside Catalyst planning. */
+    * the schema comes from the catalog, the files from the manifests, and
+    * time + partition predicates prune files inside Catalyst planning.
+    * `timeRangeNs` (the querier's `?from=`/`?to=`) becomes a plain
+    * `__timestamp` filter, which prunes through the same dataFilters path
+    * and also drops the rows of a partly overlapping file. */
   def readTable(spark: SparkSession, catalog: TableCatalog,
-                db: String, table: String): DataFrame = {
+                db: String, table: String,
+                timeRangeNs: Option[(Long, Long)] = None): DataFrame = {
     val spec = catalog.get(db, table)
       .getOrElse(throw new IllegalArgumentException(s"unknown table $db.$table"))
     val index = new GraftFileIndex(spark, catalog, spec)
     val dataSchema = dataSchemaFor(spec)
     val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema,
       None, new ParquetFileFormat(), Map.empty[String, String])(spark)
-    GraftColumnBridge.ofRows(spark, LogicalRelation(relation))
+    val df = GraftColumnBridge.ofRows(spark, LogicalRelation(relation))
+    timeRangeNs match {
+      // created-but-never-written tables have no __timestamp column yet
+      // (it appears on first write): an unresolvable filter would fail
+      // every ranged request for ALL tables
+      case Some((lo, hi)) if dataSchema.fieldNames.contains("__timestamp") =>
+        df.filter(org.apache.spark.sql.functions.col("__timestamp").between(lo, hi))
+      case _ => df
+    }
   }
 }

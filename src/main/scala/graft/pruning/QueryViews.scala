@@ -2,71 +2,6 @@ package graft.pruning
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.TableCatalog
-import graft.index.MetadataIndex
-
-/** Query-side table access with metadata.json zone-map pruning — the
-  * Spark analog of the reference querier's "resolve data location from
-  * the metadata catalog by time range" (reference README.md:115,
-  * ARCHITECTURE.md:2075-2090).
-  *
-  * Layered pruning at 100 TB:
-  *  1. this file-level min/max prune (before Spark lists anything),
-  *  2. Spark's hive partition pruning on date=/hour= dirs,
-  *  3. parquet row-group stats inside each surviving file (data is
-  *     sorted by __timestamp, so row-group ranges are tight).
-  */
-object Pruning {
-
-  /** Read a graft table, optionally pruned to a `__timestamp` ns range.
-    * The metadata.json manifest drives the file list — for object-store
-    * tables the local index paths map to remote data URIs, and unlisted
-    * (half-uploaded) objects are invisible by construction. */
-  def readTable(spark: SparkSession, catalog: TableCatalog, db: String, table: String,
-                timeRangeNs: Option[(Long, Long)] = None): DataFrame = {
-    val root = catalog.tableDir(db, table)
-    val spec = catalog.get(db, table)
-    val localFiles = timeRangeNs match {
-      case Some((lo, hi)) => MetadataIndex.pruneByTime(root, table, lo, hi)
-      case None => MetadataIndex.pruneByTime(root, table)
-    }
-    // resolve the remote root ONCE (the GraftFileIndex r10 discipline):
-    // the per-file dataUri form re-parses the S3 URL and re-applies the
-    // process-global s3a confs per manifest entry
-    val remoteRoot = spec.flatMap(s => graft.sources.ObjectStore.tableRemoteRoot(spark, s))
-    val files = localFiles.map(p => graft.sources.ObjectStore.dataUriFrom(
-      remoteRoot, root, p.getParent, p.getFileName.toString))
-    if (files.isEmpty) {
-      // empty table (or a range that pruned every file): derive the
-      // schema from the catalog via the SAME construction the FileIndex
-      // path uses — data columns plus the hive partition columns — so
-      // `readTable(...).select("hour")` resolves regardless of how much
-      // data the range hit (review r15: this branch dropped date/hour)
-      val s = spec
-        .getOrElse(throw new IllegalArgumentException(s"unknown table $db.$table"))
-      import org.apache.spark.sql.types._
-      val schema = StructType(GraftFileIndex.dataSchemaFor(s).fields ++
-        GraftFileIndex.partitionSchemaFor(s).fields)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    } else {
-      val base = remoteRoot.getOrElse(root.toString)
-      val df = spark.read
-        .option("mergeSchema", "true")
-        .option("basePath", base)
-        .parquet(files: _*)
-      // the range must also filter ROWS (review r10): pruneByTime is
-      // file-granular, so a partially-overlapping file would otherwise
-      // leak rows outside [lo, hi] — the scaladoc promises a pruned
-      // range, not a superset
-      timeRangeNs match {
-        case Some((lo, hi)) if df.columns.contains("__timestamp") =>
-          df.filter(org.apache.spark.sql.functions
-            .col("__timestamp").between(lo, hi))
-        case _ => df
-      }
-    }
-  }
-
-}
 
 /** Per-session query-view registry: views are backed by the
   * manifest-driven GraftFileIndex, so time and partition predicates in
@@ -76,9 +11,8 @@ object Pruning {
   * snapshots the manifest at construction) — the round-1 server
   * re-walked the catalog and re-inferred every schema on EVERY request.
   * An explicit querier-style range (?from=/?to=) becomes a plain
-  * `__timestamp` filter on the indexed view, which prunes through the
-  * same dataFilters path (and invalidates the cached name, since the
-  * view then no longer means "the whole table").
+  * `__timestamp` filter on the indexed view (`GraftFileIndex.readTable`),
+  * which prunes through the same dataFilters path.
   *
   * Concurrency: NO lock anywhere on the query path. Unranged requests —
   * the common path, `?db=`-scoped or not — plan against an immutable
@@ -107,7 +41,6 @@ object Pruning {
   */
 final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
   import QueryViews.{Snapshot, Versions}
-  private val registered = scala.collection.mutable.Map.empty[(String, String), Long]
 
   private val published =
     new java.util.concurrent.ConcurrentHashMap[String, Snapshot]
@@ -275,28 +208,18 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
     }
   }
 
-  /** Register ONE table's (ranged) view(s) on `s` — the single spelling
-    * registerOn (snapshot sessions) and ensure (the cached session)
-    * share (review r10: it existed twice and could drift). Failures are
+  /** Register ONE table's (ranged) view(s) on `s`. Failures are
     * ISOLATED per table, the catalog's corrupt-spec discipline lifted
     * to the manifest layer: one corrupt/vanished metadata.json must not
     * take every table's queries down. The failed table's stale views
     * are dropped so ITS queries fail attributably (unresolved relation)
-    * rather than serving an older snapshot; returns false so callers
-    * that cache never pin the hole. */
+    * rather than serving an older snapshot; returns false so a caller
+    * that caches never pins the hole. */
   private def registerTable(s: SparkSession, spec: graft.catalog.TableSpec,
                             timeRangeNs: Option[(Long, Long)],
-                            bare: String, qualifiedOk: Boolean = true): Boolean =
+                            bare: String, qualifiedOk: Boolean): Boolean =
     try {
-      val base = GraftFileIndex.readTable(s, catalog, spec.database, spec.name)
-      val df = timeRangeNs match {
-        // created-but-never-written tables have no __timestamp column
-        // yet (it appears on first write) — an unresolvable filter here
-        // would 500 EVERY ranged request for ALL tables
-        case Some((lo, hi)) if base.columns.contains("__timestamp") =>
-          base.filter(org.apache.spark.sql.functions.col("__timestamp").between(lo, hi))
-        case _ => base
-      }
+      val df = GraftFileIndex.readTable(s, catalog, spec.database, spec.name, timeRangeNs)
       if (qualifiedOk) df.createOrReplaceTempView(s"${spec.database}_${spec.name}")
       else
         // the flattened cross-db alias is AMBIGUOUS for this table (see
@@ -338,12 +261,12 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
     dup
   }
 
-  /** Register all catalog tables on a private session (no cache, no
-    * cross-request state — the session is this request's own).
-    * Returns the COMPLETENESS verdict (false = a table or artifact
-    * view was skipped); callers that CACHE the session must check it. */
-  private def registerOn(s: SparkSession, timeRangeNs: Option[(Long, Long)],
-                         bare: String): Boolean = {
+  /** Register all catalog tables (and the published artifacts) on `s`,
+    * binding the bare names of db `bare`. Returns the COMPLETENESS
+    * verdict (false = a table or artifact view was skipped); callers
+    * that CACHE the session must check it. */
+  private[graft] def registerOn(s: SparkSession, timeRangeNs: Option[(Long, Long)],
+                                bare: String): Boolean = {
     val specs = catalog.all()
     val ambiguous = ambiguousFlatNames(specs)
     val tablesOk = specs
@@ -352,58 +275,6 @@ final class QueryViews(spark: SparkSession, catalog: TableCatalog) {
       .forall(identity)
     registerArtifactsOn(s) && tablesOk
   }
-
-  def ensure(timeRangeNs: Option[(Long, Long)]): Unit = ensure(timeRangeNs, None)
-
-  /** `bareDb` scopes BARE table names to that database for this request
-    * (the reference querier's `?db=` semantics, README.md:114-133:
-    * `POST /query?db=mydb {"query": "... FROM weather"}`); qualified
-    * `db_table` names always resolve. Bare names for a non-default db
-    * are per-request state, so the cache is invalidated afterwards. */
-  def ensure(timeRangeNs: Option[(Long, Long)], bareDb: Option[String]): Unit =
-    synchronized {
-      val bare = bareDb.getOrElse("default")
-      val ambiguous = ambiguousFlatNames(catalog.all())
-      catalog.all().foreach { spec =>
-        val key = (spec.database, spec.name)
-        val flatOk = !ambiguous(s"${spec.database}_${spec.name}")
-        val v = catalog.version(spec.database, spec.name)
-        // a table that BECAME ambiguous (the colliding peer was created
-        // after this one was cached) re-registers even on a version hit,
-        // so its stale flat view is dropped; both colliders flatten to
-        // the same string, so either one's drop clears the binding
-        val cacheOk = timeRangeNs.isEmpty && bare == "default" && flatOk &&
-          registered.get(key).contains(v)
-        if (!cacheOk) {
-          val ok = registerTable(spark, spec, timeRangeNs, bare, qualifiedOk = flatOk)
-          val cacheable = ok && timeRangeNs.isEmpty && bare == "default" && flatOk
-          if (cacheable) registered(key) = v else registered.remove(key): Unit
-        }
-      }
-      // drop bare names NOT owned by the scoped db — a previous request's
-      // scope must not leak its bare bindings into this one
-      val bareOwned = catalog.all().filter(_.database == bare).map(_.name).toSet
-      catalog.all().foreach { spec =>
-        if (spec.database != bare && !bareOwned.contains(spec.name))
-          spark.catalog.dropTempView(spec.name): Unit
-      }
-      // surface a skipped artifact view on the SHARED session too —
-      // snapshot() refuses to cache incomplete sessions for this exact
-      // failure; here the session is long-lived, so a silent skip would
-      // make the view vanish until the next ensure. The next ensure
-      // retries registration unconditionally (this call is outside the
-      // per-table version cache), so logging is the missing piece.
-      if (!registerArtifactsOn(spark))
-        System.err.println(
-          "[query-views] one or more artifact views failed to register " +
-            "on the shared session; queries touching them will fail " +
-            "until the next request retries")
-    }
-
-  /** Plan a SQL statement against the shared session's whole-table views
-    * (SQL-embedded time predicates prune via the FileIndex
-    * automatically). Equivalent to `sqlFor(sqlText, None, None)`. */
-  def sql(sqlText: String): DataFrame = sqlFor(sqlText, None, None)
 }
 
 private object QueryViews {

@@ -18,7 +18,7 @@ import graft.index.MetadataIndex
 import graft.ingest.{BufferedIngest, IngestWriter}
 import graft.lineproto.LineProtocolParser
 import graft.lineproto.LineProtocolParser.Precision
-import graft.pruning.{Pruning, QueryViews}
+import graft.pruning.{GraftFileIndex, QueryViews}
 
 /** HTTP front-end — the reference's API surface (reference
   * merge/merge.go:44-101, handlers/insert_into.go, handlers/create_table.go,
@@ -531,7 +531,7 @@ final class GigHttpServer(spark: SparkSession, root: String,
     def str(f: String): Option[String] = jsonStr(j, f)
     def intOf(f: String): Option[Int] = jsonInt(j, f)
     graft.Tables.init(spark)
-    val base = Pruning.readTable(spark, catalog, db, table)
+    val base = GraftFileIndex.readTable(spark, catalog, db, table)
     val prefix = if (db == "default") table else s"${db}_$table"
     val outDir = java.nio.file.Paths.get(root, ".artifacts",
       s"$prefix-$kind-${java.util.UUID.randomUUID()}").toString
@@ -755,7 +755,7 @@ final class GigHttpServer(spark: SparkSession, root: String,
     import org.apache.spark.sql.catalyst.expressions.Expression
     // NOTE: the underscore-joined prefix shares QueryViews' flat-name
     // ambiguity (db 'a_b' + table 'c' vs db 'a' + table 'b_c' — see
-    // Pruning.ambiguousFlatNames): two such tables' artifacts of one
+    // QueryViews.ambiguousFlatNames): two such tables' artifacts of one
     // kind would publish under one view name, latest-bind wins. The
     // published names are part of the served contract, so renaming the
     // convention is a compat break; the table-view side fails loudly on
@@ -942,11 +942,17 @@ final class GigHttpServer(spark: SparkSession, root: String,
   private[server] final class BodyTooLarge
     extends RuntimeException(s"request body exceeds $MaxBodyBytes bytes")
 
+  /** The request body, inflated when gzip-encoded. A plain body whose
+    * declared `Content-Length` is over the limit is refused before any
+    * of it is read. */
   private def readBody(ex: HttpExchange): Array[Byte] = {
+    val headers = ex.getRequestHeaders
     val raw: InputStream =
-      if (Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
-        .exists(_.toLowerCase.contains("gzip")))
+      if (Option(headers.getFirst("Content-Encoding")).exists(_.toLowerCase.contains("gzip")))
         new GZIPInputStream(ex.getRequestBody)
+      else if (Option(headers.getFirst("Content-Length"))
+          .flatMap(_.trim.toLongOption).exists(_ > MaxBodyBytes))
+        throw new BodyTooLarge
       else ex.getRequestBody
     val body = raw.readNBytes(MaxBodyBytes.toInt + 1)
     if (body.length > MaxBodyBytes) throw new BodyTooLarge

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * `spark.read.csv` with the translated options.
   *
   * Global — not session — temp views, because /query executes on
-  * snapshot/private child sessions (`Pruning.sqlFor`) that do not see
+  * snapshot/private child sessions (`QueryViews.sqlFor`) that do not see
   * the outer session's temp catalog; the global-temp catalog is
   * SparkContext-wide, so one registration serves every executing
   * session. The name is content-addressed over (paths, options), so

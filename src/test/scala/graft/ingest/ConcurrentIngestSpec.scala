@@ -7,7 +7,7 @@ import scala.concurrent.duration._
 import graft.SparkSpec
 import graft.catalog.TableCatalog
 import graft.lineproto.LineProtocolParser
-import graft.pruning.Pruning
+import graft.pruning.GraftFileIndex
 
 /** Scaled-down analog of the reference's e2e concurrency test
   * (e2e_test.go:44-94: 200 goroutines × 100k rows): many writer threads
@@ -41,7 +41,7 @@ class ConcurrentIngestSpec extends SparkSpec {
       }
       futures.foreach(Await.result(_, 2.minutes))
       buffer.flush()
-      val df = Pruning.readTable(spark, cat, "default", "conc")
+      val df = GraftFileIndex.readTable(spark, cat, "default", "conc")
       val expected = threads * batchesPerThread * rowsPerBatch
       assert(df.count() == expected)
       // exactly once: all v values distinct
@@ -74,7 +74,7 @@ class ConcurrentIngestSpec extends SparkSpec {
         .foreach(Await.result(_, 1.minute))
       val ackSec = (System.nanoTime() - t0) / 1e9
       assert(ackSec < 1.5, s"hot-regime ack took $ackSec s (timer-bound?)")
-      val df = Pruning.readTable(spark, cat, "default", "hot")
+      val df = GraftFileIndex.readTable(spark, cat, "default", "hot")
       assert(df.count() == 400)
     } finally buffer.close()
   }
@@ -101,7 +101,7 @@ class ConcurrentIngestSpec extends SparkSpec {
       next.map(buffer.store).foreach(Await.result(_, 1.minute))
       val ackSec = (System.nanoTime() - t0) / 1e9
       assert(ackSec < 1.0, s"hot ack took $ackSec s (waited for the gather tick?)")
-      assert(Pruning.readTable(spark, cat, "default", "arrive").count() == 400)
+      assert(GraftFileIndex.readTable(spark, cat, "default", "arrive").count() == 400)
       assert(parquetFiles(root, "arrive") == 2)
     } finally buffer.close()
   }
@@ -125,7 +125,7 @@ class ConcurrentIngestSpec extends SparkSpec {
       val ticks = math.ceil((System.nanoTime() - t0) / 1e9).toInt
       val files = parquetFiles(root, "trickle")
       assert(files <= ticks + 1, s"$files files in $ticks s of trickle writes")
-      assert(Pruning.readTable(spark, cat, "default", "trickle").count() == 600)
+      assert(GraftFileIndex.readTable(spark, cat, "default", "trickle").count() == 600)
     } finally buffer.close()
   }
 
@@ -155,7 +155,7 @@ class ConcurrentIngestSpec extends SparkSpec {
       done.foreach(Await.result(_, 2.minutes))
       val files = parquetFiles(root, "cohort")
       assert(files <= rounds + 1, s"$files files for $rounds rounds of $writers writers")
-      val df = Pruning.readTable(spark, cat, "default", "cohort")
+      val df = GraftFileIndex.readTable(spark, cat, "default", "cohort")
       assert(df.count() == writers * rounds * 100)
       assert(df.select("v").distinct().count() == writers * rounds * 100)
     } finally {
@@ -193,7 +193,7 @@ class ConcurrentIngestSpec extends SparkSpec {
       val late = acks.take(3).flatMap(_.drop(before + 3))
       assert(late.size == 9 && late.forall(_ < gather / 2000.0),
         s"acks after the threshold came down: $late")
-      assert(Pruning.readTable(spark, cat, "default", "shrink").count() ==
+      assert(GraftFileIndex.readTable(spark, cat, "default", "shrink").count() ==
         (3 * (before + after) + before) * 100)
     } finally {
       buffer.close()

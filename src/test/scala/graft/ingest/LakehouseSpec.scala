@@ -8,7 +8,8 @@ import graft.catalog.TableCatalog
 import graft.compact.Compactor
 import graft.index.MetadataIndex
 import graft.lineproto.LineProtocolParser
-import graft.pruning.Pruning
+import graft.pruning.GraftFileIndex
+import graft.pruning.GraftFileIndexSpec.scanNumFiles
 
 /** End-to-end lakehouse write path: ingest → layout → index → pruned read
   * → schema evolution → compaction (FIXTURES.md F1/F3/F4 shapes). */
@@ -40,7 +41,7 @@ class LakehouseSpec extends SparkSpec {
     val idx = MetadataIndex.load(partDirs.head, "weather")
     assert(idx.rowCount == 3 && idx.minTime > t0)
 
-    val df = Pruning.readTable(spark, cat, "default", "weather")
+    val df = GraftFileIndex.readTable(spark, cat, "default", "weather")
     assert(df.count() == 3)
     val avg0 = df.agg(avg("temperature")).collect().head.getDouble(0)
     assert(math.abs(avg0 - 87.0) < 1e-9)
@@ -52,7 +53,7 @@ class LakehouseSpec extends SparkSpec {
     val (cat, w) = writer(root)
     LineProtocolParser.parse("t a=1i,b=\"x\"", nowNs = () => now()).foreach(w.store)
     LineProtocolParser.parse("t b=\"y\"", nowNs = () => now()).foreach(w.store)
-    val df = Pruning.readTable(spark, cat, "default", "t")
+    val df = GraftFileIndex.readTable(spark, cat, "default", "t")
     assert(df.count() == 2)
     assert(df.filter(col("a").isNull).count() == 1)
     // type conflict rejected
@@ -68,12 +69,13 @@ class LakehouseSpec extends SparkSpec {
     (1 to 3).foreach { _ =>
       LineProtocolParser.parse("m v=1", nowNs = () => now()).foreach(w.store)
     }
-    val allFiles = MetadataIndex.pruneByTime(root.resolve("default/m"), "m")
-    assert(allFiles.size == 3)
-    val idx = MetadataIndex.load(allFiles.head.getParent, "m")
-    val oneT = idx.entries.values.head.minTime
-    val pruned = MetadataIndex.pruneByTime(root.resolve("default/m"), "m", oneT, oneT)
-    assert(pruned.size == 1)
+    val all = GraftFileIndex.readTable(spark, cat, "default", "m")
+    assert(scanNumFiles(all) == 3)
+    val partDir = MetadataIndex.partitionDirs(root.resolve("default/m")).head
+    val oneT = MetadataIndex.load(partDir, "m").entries.values.head.minTime
+    val pruned = GraftFileIndex.readTable(spark, cat, "default", "m", Some((oneT, oneT)))
+    assert(scanNumFiles(pruned) == 1)
+    assert(pruned.count() == 1)
   }
 
   test("compaction merges L1 files into one sorted L2 file + defers deletes (F4)") {
@@ -108,7 +110,7 @@ class LakehouseSpec extends SparkSpec {
     assert(MetadataIndex.load(partDir, "c").walSequence == w5 + 2)
 
     // data intact and sorted by __timestamp within the merged file
-    val df = Pruning.readTable(spark, cat, "default", "c")
+    val df = GraftFileIndex.readTable(spark, cat, "default", "c")
     assert(df.count() == 5)
     val ts = df.orderBy("__timestamp").select("v").collect().map(_.getLong(0)).toSeq
     assert(ts == Seq(1L, 2L, 3L, 4L, 5L))
@@ -140,7 +142,7 @@ class LakehouseSpec extends SparkSpec {
     assert(after.entries.keys.exists(_.endsWith(".5.parquet")), after.entries.keys)
     assert(after.entries.keys.count(_.endsWith(".4.parquet")) == 0, after.entries.keys)
     assert(after.rowCount == 4)
-    assert(Pruning.readTable(spark, cat, "default", "t4").count() == 4)
+    assert(GraftFileIndex.readTable(spark, cat, "default", "t4").count() == 4)
   }
 
   test("catalog: stale disk state never clobbers a newer in-memory spec") {
@@ -183,7 +185,7 @@ class LakehouseSpec extends SparkSpec {
     val e = MetadataIndex.load(dir, "ob").entries.values.head
     assert(e.minTime > t0, s"min_time must be arrival __timestamp, got ${e.minTime}")
     assert(e.dataMinTime == oldNs + 1 && e.dataMaxTime == oldNs + 3)
-    assert(Pruning.readTable(spark, cat, "default", "ob").count() == 3)
+    assert(GraftFileIndex.readTable(spark, cat, "default", "ob").count() == 3)
   }
 
   test("manifest parse cache: unchanged file returns the same instance; writes invalidate") {
@@ -207,7 +209,7 @@ class LakehouseSpec extends SparkSpec {
     import spark.implicits._
     w.storeDataFrame("default", "nd",
       Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "score"))
-    val df = Pruning.readTable(spark, cat, "default", "nd")
+    val df = GraftFileIndex.readTable(spark, cat, "default", "nd")
     assert(df.count() == 2)
     assert(cat.get("default", "nd").get.columns.map(_._1)
       .containsSlice(Seq("id", "name", "score")))

@@ -6,25 +6,14 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.catalog.TableCatalog
+import graft.catalog.{TableCatalog, TableSpec}
 import graft.ingest.IngestWriter
 import graft.lineproto.LineProtocolParser
 
 /** Catalyst-integrated manifest pruning: the scan's OWN planning must
   * skip non-overlapping files (no SQL inspection, no explicit ranges). */
 class GraftFileIndexSpec extends SparkSpec {
-
-  private def scanNumFiles(df: DataFrame): Long = {
-    df.collect()
-    val plan = df.queryExecution.executedPlan
-    val scans = plan.collect { case s: FileSourceScanExec => s } ++
-      (plan match {
-        case a: AdaptiveSparkPlanExec =>
-          a.executedPlan.collect { case s: FileSourceScanExec => s }
-        case _ => Nil
-      })
-    scans.head.metrics("numFiles").value
-  }
+  import GraftFileIndexSpec.scanNumFiles
 
   private def mkTable(): (TableCatalog, Long) = {
     val root = Files.createTempDirectory("graft-fidx-")
@@ -117,5 +106,57 @@ class GraftFileIndexSpec extends SparkSpec {
     val df = GraftFileIndex.readTable(spark, cat, "default", "ev")
     assert(df.count() == 2)
     assert(df.filter(col("b").isNull).count() == 1)
+  }
+
+  test("the artifact build's base reads evolved and Merge-engine tables as the footer-merge read did") {
+    // expected columns and rows come from the footer schema-merge read
+    // (spark.read.option("mergeSchema")) that artifact builds used before
+    // they read through this index
+    val root = Files.createTempDirectory("graft-fidx5-")
+    val cat = new TableCatalog(root.toString)
+    var tick = 0L
+    val w = new IngestWriter(spark, root.toString, cat,
+      () => { tick += 1; 1700000000000000000L + tick * 1000000L })
+    // `ev`: a later write adds f, u and b
+    LineProtocolParser.parse("ev,host=a v=1i,s=\"x\" 1700000000000000001").foreach(w.store)
+    LineProtocolParser.parse("ev,host=b v=2i,f=1.5,u=4u,b=true 1700000000000000002\n" +
+      "ev,host=c v=3i,s=\"z\" 1700000000000000003").foreach(w.store)
+    // `flat`: a flat-dir table ordered by v; a later write adds name
+    cat.upsert(TableSpec("default", "flat", engine = "Merge", orderBy = Seq("v"),
+      columns = Seq("v" -> "INT64")))
+    LineProtocolParser.parse("flat v=3i 1700000000000000001\nflat v=1i 1700000000000000002")
+      .foreach(w.store)
+    LineProtocolParser.parse("flat v=2i,name=\"n\" 1700000000000000003").foreach(w.store)
+    def shape(table: String): (String, Seq[String]) = {
+      val df = GraftFileIndex.readTable(spark, cat, "default", table)
+      (df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","),
+        df.collect().map(_.toSeq.mkString("(", ",", ")")).sorted.toSeq)
+    }
+    assert(shape("ev") == (
+      "host:string,v:bigint,s:string,time:bigint,__timestamp:bigint,f:double," +
+        "u:decimal(20,0),b:boolean,date:date,hour:int",
+      Seq("(a,1,x,1700000000000000001,1700000000001000000,null,null,null,2023-11-14,22)",
+        "(b,2,null,1700000000000000002,1700000000002000000,1.5,4,true,2023-11-14,22)",
+        "(c,3,z,1700000000000000003,1700000000003000000,null,null,null,2023-11-14,22)")))
+    assert(shape("flat") == (
+      "v:bigint,time:bigint,__timestamp:bigint,name:string",
+      Seq("(1,1700000000000000002,1700000000004000000,null)",
+        "(2,1700000000000000003,1700000000005000000,n)",
+        "(3,1700000000000000001,1700000000004000000,null)")))
+  }
+}
+
+object GraftFileIndexSpec {
+  /** Files the executed scan of `df` read (runs the query). */
+  def scanNumFiles(df: DataFrame): Long = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s } ++
+      (plan match {
+        case a: AdaptiveSparkPlanExec =>
+          a.executedPlan.collect { case s: FileSourceScanExec => s }
+        case _ => Nil
+      })
+    scans.head.metrics("numFiles").value
   }
 }

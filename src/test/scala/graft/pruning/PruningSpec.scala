@@ -5,13 +5,14 @@ import graft.SparkSpec
 import graft.catalog.TableCatalog
 import graft.ingest.IngestWriter
 import graft.lineproto.LineProtocolParser
+import graft.pruning.GraftFileIndexSpec.scanNumFiles
 
 /** Query-path time pruning: the metadata.json zone map must shrink the
   * actual file list Spark reads (reference querier resolves files by time
   * range — ARCHITECTURE.md:2079). */
 class PruningSpec extends SparkSpec {
 
-  test("time-bounded query reads only overlapping files (df.inputFiles)") {
+  test("time-bounded query reads only overlapping files (scan numFiles)") {
     val root = Files.createTempDirectory("graft-prune-")
     val cat = new TableCatalog(root.toString)
     var tick = 0L
@@ -21,28 +22,25 @@ class PruningSpec extends SparkSpec {
       LineProtocolParser.parse(s"m v=${i}i", nowNs = () => t0 + tick * 1000000L)
         .foreach(w.store)
     }
-    val all = Pruning.readTable(spark, cat, "default", "m")
-    assert(all.inputFiles.length == 3)
+    val all = GraftFileIndex.readTable(spark, cat, "default", "m")
+    assert(scanNumFiles(all) == 3)
 
-    val idx = graft.index.MetadataIndex.pruneByTime(root.resolve("default/m"), "m")
+    val partDir = graft.index.MetadataIndex.partitionDirs(root.resolve("default/m")).head
     val oneT = graft.index.MetadataIndex
-      .load(idx.head.getParent, "m").entries.values.map(_.minTime).min
-    val pruned = Pruning.readTable(spark, cat, "default", "m", Some((oneT, oneT)))
-    assert(pruned.inputFiles.length == 1)
+      .load(partDir, "m").entries.values.map(_.minTime).min
+    val pruned = GraftFileIndex.readTable(spark, cat, "default", "m", Some((oneT, oneT)))
+    assert(scanNumFiles(pruned) == 1)
     assert(pruned.count() == 1)
 
-    // the view path: a ranged ensure() registers a range-filtered view
-    // (pruned by the FileIndex at plan time); a later unranged ensure()
-    // restores the full table (cache invalidated)
+    // the view path: a ranged request plans on range-filtered views
+    // (pruned by the FileIndex at plan time); an unranged one sees the
+    // whole table
     val views = new QueryViews(spark, cat)
-    views.synchronized { views.ensure(Some((oneT, oneT))) }
-    assert(spark.table("m").count() == 1)
-    views.synchronized { views.ensure(None) }
-    assert(spark.table("m").count() == 3)
-    // SQL-embedded time predicates prune through the same path: the
-    // GraftFileIndexSpec asserts scan-level numFiles; here row-correctness
-    assert(spark.sql(s"SELECT count(*) c FROM m WHERE __timestamp = $oneT")
-      .collect().head.getLong(0) == 1)
+    assert(count(views.sqlFor("SELECT count(*) c FROM m", Some((oneT, oneT)), None)) == 1)
+    assert(count(views.sqlFor("SELECT count(*) c FROM m", None, None)) == 3)
+    // SQL-embedded time predicates prune through the same path
+    assert(count(views.sqlFor(
+      s"SELECT count(*) c FROM m WHERE __timestamp = $oneT", None, None)) == 1)
   }
 
   test("concurrent ranged queries run in private sessions, no cross-stomp") {
@@ -55,9 +53,8 @@ class PruningSpec extends SparkSpec {
       LineProtocolParser.parse(s"cm v=${i}i", nowNs = () => t0 + tick * 1000000L)
         .foreach(w.store)
     }
-    val stamps = graft.index.MetadataIndex
-      .pruneByTime(root.resolve("default/cm"), "cm")
-      .map(p => graft.index.MetadataIndex.load(p.getParent, "cm"))
+    val stamps = graft.index.MetadataIndex.partitionDirs(root.resolve("default/cm"))
+      .map(d => graft.index.MetadataIndex.load(d, "cm"))
       .flatMap(_.entries.values.map(_.minTime)).distinct.sorted
     assert(stamps.size == 4)
     val views = new QueryViews(spark, cat)
@@ -125,19 +122,19 @@ class PruningSpec extends SparkSpec {
     val t0 = 1700000000000000000L
     val w = new IngestWriter(spark, root.toString, cat, () => t0)
     LineProtocolParser.parse("es v=1i", nowNs = () => t0).foreach(w.store)
-    val full = Pruning.readTable(spark, cat, "default", "es")
+    val full = GraftFileIndex.readTable(spark, cat, "default", "es")
     // a range hitting NOTHING must answer with the same column set as a
-    // range hitting something (review r15: the empty branch dropped the
-    // date/hour partition columns, so select("hour") worked or threw
+    // range hitting something (review r15: an empty-table branch dropped
+    // the date/hour partition columns, so select("hour") worked or threw
     // depending on how much data the range hit)
-    val empty = Pruning.readTable(spark, cat, "default", "es", Some((1L, 2L)))
+    val empty = GraftFileIndex.readTable(spark, cat, "default", "es", Some((1L, 2L)))
     assert(empty.count() == 0)
-    assert(empty.columns.sorted.toSeq == full.columns.sorted.toSeq,
+    assert(empty.columns.toSeq == full.columns.toSeq,
       s"${empty.columns.toSeq} vs ${full.columns.toSeq}")
     assert(empty.select("date", "hour", "v").count() == 0) // resolves
-    // and it matches the FileIndex path's columns too
-    val fi = GraftFileIndex.readTable(spark, cat, "default", "es")
-    assert(empty.columns.sorted.toSeq == fi.columns.sorted.toSeq)
+    // and so does a ranged view
+    val views = new QueryViews(spark, cat)
+    assert(views.sqlFor("SELECT date, hour, v FROM es", Some((1L, 2L)), None).count() == 0)
   }
 
   test("colliding flattened db_table names fail loudly instead of silently last-binding") {
@@ -148,42 +145,20 @@ class PruningSpec extends SparkSpec {
     // db 'a_b' table 'c' registers first and owns the flat name...
     w.storeDataFrame("a_b", "c", Seq((1L, "x")).toDF("id", "s"))
     val views = new QueryViews(spark, cat)
-    views.ensure(None)
-    assert(spark.table("a_b_c").count() == 1)
+    val flat = "SELECT count(*) c FROM a_b_c"
+    assert(count(views.sqlFor(flat, None, None)) == 1)
     // ...until db 'a' table 'b_c' makes 'a_b_c' ambiguous: the flat view
     // must now resolve for NEITHER (an unresolved-relation error is
     // attributable; a silent last-wins binding reads the wrong table
     // nondeterministically across snapshot rebuilds)
     w.storeDataFrame("a", "b_c", (1 to 2).map(i => (i.toLong, "y")).toDF("id", "s"))
-    views.ensure(None)
-    intercept[Exception](spark.table("a_b_c").count())
-    // the snapshot path agrees
-    intercept[Exception](
-      views.sqlFor("SELECT count(*) c FROM a_b_c", None, None).collect())
+    intercept[Exception](views.sqlFor(flat, None, None).collect())
     // both tables stay reachable via bare names under their own ?db scope
-    assert(views.sqlFor("SELECT count(*) c FROM c", None, Some("a_b"))
-      .collect().head.getLong(0) == 1)
-    assert(views.sqlFor("SELECT count(*) c FROM b_c", None, Some("a"))
-      .collect().head.getLong(0) == 2)
+    assert(count(views.sqlFor("SELECT count(*) c FROM c", None, Some("a_b"))) == 1)
+    assert(count(views.sqlFor("SELECT count(*) c FROM b_c", None, Some("a"))) == 2)
     // non-colliding tables keep their flat alias
     w.storeDataFrame("other", "t", Seq((9L, "z")).toDF("id", "s"))
-    views.ensure(None)
-    assert(spark.table("other_t").count() == 1)
-  }
-
-  test("unranged views are cached by version and refresh on write") {
-    val root = Files.createTempDirectory("graft-vcache-")
-    val cat = new TableCatalog(root.toString)
-    val w = new IngestWriter(spark, root.toString, cat)
-    import spark.implicits._
-    w.storeDataFrame("default", "vc", Seq((1L, "a")).toDF("id", "s"))
-    val views = new QueryViews(spark, cat)
-    views.ensure(None)
-    assert(spark.table("vc").count() == 1)
-    views.ensure(None) // no-op: same version
-    w.storeDataFrame("default", "vc", Seq((2L, "b")).toDF("id", "s"))
-    views.ensure(None) // version bumped -> re-registered
-    assert(spark.table("vc").count() == 2)
+    assert(count(views.sqlFor("SELECT count(*) c FROM other_t", None, None)) == 1)
   }
 
   private def count(df: org.apache.spark.sql.DataFrame): Long =

@@ -442,7 +442,7 @@ class DuckDialectSpec extends SparkSpec {
     assert(rows.map(r => (r.getString(0), r.getInt(1))).toSeq ==
       Seq(("alice", 31), ("bob", 47)))
     // the view is GLOBAL: a fresh child session (the /query execution
-    // path, Pruning.sqlFor's newSession) sees it
+    // path, QueryViews.sqlFor's newSession) sees it
     assert(spark.newSession().sql(info.sql).collect().length == 2)
 
     // headerless numeric file: sniff says no header, columns are _c0...

@@ -601,6 +601,22 @@ class GigHttpServerSpec extends SparkSpec {
     assert(r.body().contains("exceeds"), r.body())
   }
 
+  test("a declared Content-Length over MaxBodyBytes answers 413 before the body is sent") {
+    val sock = new java.net.Socket("127.0.0.1", server.boundPort)
+    try {
+      // only a few bytes of the declared body are ever sent: a server
+      // that waits for the rest leaves the status read to time out
+      sock.setSoTimeout(20000)
+      val req = "POST /write?db=toolong HTTP/1.1\r\nHost: x\r\n" +
+        s"Content-Length: ${server.MaxBodyBytes + 1}\r\n\r\nm v=1i"
+      sock.getOutputStream.write(req.getBytes(UTF_8))
+      sock.getOutputStream.flush()
+      val status = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, UTF_8)).readLine()
+      assert(status != null && status.startsWith("HTTP/1.1 413"), status)
+    } finally sock.close()
+  }
+
   test("create table via reference YAML shape (F8) then JSON") {
     val yaml =
       """create_table: metrics

@@ -7,7 +7,7 @@ import graft.compact.Compactor
 import graft.index.MetadataIndex
 import graft.ingest.IngestWriter
 import graft.lineproto.LineProtocolParser
-import graft.pruning.Pruning
+import graft.pruning.GraftFileIndex
 
 /** Object-store data residency: the reference S3 URL grammar
   * (merge_tree_service.go:122-146), s3a config wiring, and the
@@ -102,7 +102,7 @@ class ObjectStoreSpec extends SparkSpec {
     assert(MetadataIndex.load(partDirs.head, "rt").entries.size == 4)
 
     // read resolves through the manifest to remote URIs
-    val df = Pruning.readTable(spark, cat, "default", "rt")
+    val df = GraftFileIndex.readTable(spark, cat, "default", "rt")
     assert(df.count() == 4)
     assert(df.inputFiles.forall(_.contains(dataRoot.getFileName.toString)))
 
@@ -110,7 +110,7 @@ class ObjectStoreSpec extends SparkSpec {
     // next to the real ones and re-read
     val strayDir = Paths.get(uris.head.stripPrefix("file://")).getParent
     Files.writeString(strayDir.resolve("deadbeef.1.parquet"), "not parquet")
-    assert(Pruning.readTable(spark, cat, "default", "rt").count() == 4)
+    assert(GraftFileIndex.readTable(spark, cat, "default", "rt").count() == 4)
 
     // compaction merges remotely and the local manifest swaps files
     val plans = Compactor.compactTable(spark, cat, "default", "rt", graceMs = 0L)
@@ -118,7 +118,7 @@ class ObjectStoreSpec extends SparkSpec {
     val idx = MetadataIndex.load(partDirs.head, "rt")
     assert(idx.entries.size == 1 && idx.entries.keys.head.endsWith(".2.parquet"))
     assert(idx.rowCount == 4)
-    assert(Pruning.readTable(spark, cat, "default", "rt").count() == 4)
+    assert(GraftFileIndex.readTable(spark, cat, "default", "rt").count() == 4)
 
     // gc (grace elapsed) deletes the merged-away REMOTE objects
     Compactor.compactTable(spark, cat, "default", "rt", graceMs = 0L)

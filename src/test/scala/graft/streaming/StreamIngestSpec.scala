@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.catalog.TableCatalog
 import graft.ingest.IngestWriter
-import graft.pruning.Pruning
+import graft.pruning.GraftFileIndex
 
 class StreamIngestSpec extends SparkSpec {
 
@@ -30,7 +30,7 @@ class StreamIngestSpec extends SparkSpec {
       checkpointDir = Some(ckpt.toString))
     q.awaitTermination(60000)
 
-    val df = Pruning.readTable(spark, cat, "default", "cpu")
+    val df = GraftFileIndex.readTable(spark, cat, "default", "cpu")
     assert(df.count() == 3)
     assert(df.columns.contains("__timestamp"))
     val hosts = df.select("host").collect().map(_.getString(0)).sorted.toSeq
@@ -68,7 +68,7 @@ class StreamIngestSpec extends SparkSpec {
     val q1 = StreamIngest.start(spark, writer, spec, landing.toString,
       trigger = Trigger.AvailableNow(), checkpointDir = Some(ckpt.toString))
     q1.awaitTermination(60000)
-    assert(Pruning.readTable(spark, cat, "default", "wp").count() == 1)
+    assert(GraftFileIndex.readTable(spark, cat, "default", "wp").count() == 1)
     // operator wipes the checkpoint to reprocess and restarts with the
     // SAME path: batchIds restart at 0, and the replay marker must not
     // outlive the wipe — a path-keyed marker would read the new batches
@@ -79,7 +79,7 @@ class StreamIngestSpec extends SparkSpec {
     val q2 = StreamIngest.start(spark, writer, spec, landing.toString,
       trigger = Trigger.AvailableNow(), checkpointDir = Some(ckpt.toString))
     q2.awaitTermination(60000)
-    val vs = Pruning.readTable(spark, cat, "default", "wp")
+    val vs = GraftFileIndex.readTable(spark, cat, "default", "wp")
       .select("v").collect().map(_.getDouble(0)).toSeq
     // the fresh checkpoint re-lists b1 (a duplicate is the documented
     // at-least-once direction); the NEW file's row must be present
@@ -124,7 +124,7 @@ class StreamIngestSpec extends SparkSpec {
       assert(times == times.sorted, s"file $u not sorted by time")
     }
     // and the union is complete + readable through the pruned table path
-    val all = Pruning.readTable(spark, cat, "default", "par")
+    val all = GraftFileIndex.readTable(spark, cat, "default", "par")
     assert(all.count() == 4000)
 
     // contrast: the HTTP/buffered flush shape stays single-file
