@@ -264,8 +264,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       val t = f.dataType match {
         case LongType => "INT64"
         // UINT64 IS decimal(20,0): any other precision/scale would write
-        // parquet files mergeSchema can never reconcile with the
-        // table's decimal(20,0) files, breaking every later read+merge
+        // parquet files that neither the catalog-typed table read nor the
+        // Compactor's mergeSchema read can reconcile with decimal(20,0)
         case d: DecimalType if d.precision == 20 && d.scale == 0 => "UINT64"
         case d: DecimalType => throw new IllegalArgumentException(
           s"decimal(${d.precision},${d.scale}) unsupported for column " +

@@ -197,13 +197,13 @@ object GraftFileIndex {
     * DateType/IntegerType match both Spark's own hive-partition inference
     * (round-1 behavior) and DuckDB's — StringType here would silently turn
     * `SELECT hour FROM t` from JSON number 22 into "22" over /query. */
-  def partitionSchemaFor(spec: TableSpec): StructType =
+  private def partitionSchemaFor(spec: TableSpec): StructType =
     if (spec.engine == "HiveMerge")
       StructType(Seq(StructField("date", DateType), StructField("hour", IntegerType)))
     else StructType(Nil)
 
   /** Data schema from the catalog spec. */
-  def dataSchemaFor(spec: TableSpec): StructType =
+  private def dataSchemaFor(spec: TableSpec): StructType =
     StructType(spec.columns.map { case (n, t) =>
       StructField(n, graft.catalog.GraftTypes.sparkType(t))
     })
