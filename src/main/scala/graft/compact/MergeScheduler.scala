@@ -80,5 +80,11 @@ final class MergeScheduler(spark: SparkSession, catalog: TableCatalog,
     }.sum
   }
 
-  override def close(): Unit = scheduler.shutdown()
+  /** Stop ticking and wait for an in-flight tick, so no merge or gc runs
+    * after close returns. The wait is bounded (30 s) under the 60 s
+    * perfbench gives a server to exit after SIGTERM. Safe to repeat. */
+  override def close(): Unit = {
+    scheduler.shutdown()
+    scheduler.awaitTermination(30, TimeUnit.SECONDS): Unit
+  }
 }

@@ -22,13 +22,14 @@ import graft.sources.ObjectStore
   * `{root}/{db}/{table}/date=YYYY-MM-DD/hour=HH/{uuid}.1.parquet` →
   * metadata.json index update.
   *
-  * Two write paths share staging, publish and the manifest commit. A
-  * buffered line-protocol flush (`store`) holds its rows in driver
-  * memory and carries one arrival stamp, so one partition dir: its rows
-  * become UnsafeRows on the driver and Spark's Parquet writer encodes
-  * them in the flush thread, with no Spark job. DataFrames
-  * (`storeDataFrame`: NDJSON, bulk, StreamIngest) keep the Spark write,
-  * whose tasks read and partition the data where it lives.
+  * The batch flush and the firehose DataFrame write share staging,
+  * publish and the manifest commit. A buffered flush (`store`: every
+  * HTTP body, line protocol or NDJSON) holds its rows in driver memory
+  * and carries one arrival stamp, so one partition dir: its rows become
+  * UnsafeRows on the driver and Spark's Parquet writer encodes them in
+  * the flush thread, with no Spark job. A DataFrame (`storeDataFrame`:
+  * StreamIngest) keeps the Spark write, whose tasks read and partition
+  * the data where it lives.
   *
   * Differences from the reference, by design (SURVEY §2.1 quirks):
   *  - date AND hour derive per-row from `__timestamp` (the reference
@@ -194,18 +195,21 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     out.close()
   }
 
-  /** On HiveMerge tables `date`/`hour` are DERIVED partition columns: the
-    * write path's withColumn would silently replace a client column of
-    * that name (and partitionBy would strip it into the dir name) — acked
-    * data destroyed invisibly. Rejected HERE, before catalog.evolve
-    * persists anything (review r15: the guard used to run inside write(),
-    * AFTER evolve had already upserted the reserved column into the
-    * table spec — one rejected write polluted the catalog forever). For
-    * a table not yet in the catalog the engine is evolve's own default
-    * (HiveMerge), so the pre-create check matches what evolve would
-    * build. */
-  private def guardReservedPartitionCols(db: String, table: String,
-                                         names: Seq[String]): Unit = {
+  /** Client columns the engine owns, rejected before catalog.evolve
+    * persists anything (and, on `/write`, before anything is enqueued):
+    * a reserved column in the spec would poison every later write.
+    * `__timestamp` is the arrival stamp: a client column of that name
+    * would lose its values to the stamp, or forge it. On HiveMerge tables
+    * `date`/`hour` are derived partition columns: the write would replace
+    * a client column of that name and strip it into the dir name — acked
+    * data destroyed invisibly. A table not yet in the catalog gets
+    * evolve's default engine (HiveMerge). `catalog.get` is memory-first:
+    * no I/O on a known table. */
+  private[graft] def rejectReserved(db: String, table: String, names: Seq[String]): Unit = {
+    if (names.contains("__timestamp"))
+      throw new IllegalArgumentException(
+        "column '__timestamp' is reserved (engine arrival time); " +
+          "use the line-protocol timestamp token for event time")
     val engine = catalog.get(db, table).map(_.engine).getOrElse("HiveMerge")
     if (engine == "HiveMerge") IngestWriter.PartitionPatterns.foreach { case (c, _) =>
       if (names.contains(c)) throw new IllegalArgumentException(
@@ -219,14 +223,7 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     * (row count, the one stamp, the chunks' `time` ranges), not from
     * re-reading the file's footer. Returns URIs written. */
   def store(batch: Batch): Seq[String] = {
-    // the engine OWNS __timestamp (the arrival stamp below): a client
-    // field/tag of that name would silently lose its values to the
-    // stamp and double-enter the catalog — reject loudly
-    if (batch.schema.exists(_._1 == "__timestamp"))
-      throw new IllegalArgumentException(
-        "column '__timestamp' is reserved (engine arrival time); " +
-          "use the line-protocol timestamp token for event time")
-    guardReservedPartitionCols(batch.database, batch.table, batch.schema.map(_._1))
+    rejectReserved(batch.database, batch.table, batch.schema.map(_._1))
     val mark = phaseClock()
     val spec = catalog.evolve(batch.database, batch.table,
       batch.schema.map { case (n, t) => (n, typeName(t)) } :+ ("__timestamp" -> "INT64"))
@@ -245,21 +242,16 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     }
   }
 
-  /** Store an arbitrary DataFrame (NDJSON/createDataFrame ingest path).
-    * Schema must be line-proto-compatible types.
-    *
-    * `singleFile = true` (HTTP/buffered flushes) keeps the reference's
-    * one-file-per-flush shape via a single sort task. `singleFile =
-    * false` (the StreamIngest firehose path) keeps the DataFrame's
-    * existing executor partitioning — no shuffle, no single-task
-    * bottleneck: each task sorts its slice by (partition cols ++
-    * orderBy) and writes its own sorted file per (date, hour); the
-    * L1→L2 compactor merges the extra files, which is exactly what it
-    * exists for. (Repartitioning on (date, hour) would NOT scale here:
-    * at firehose rates nearly all rows share the current hour, so that
-    * key hashes the whole batch back into one task.) */
-  def storeDataFrame(db: String, table: String, df: DataFrame,
-                     singleFile: Boolean = true): Seq[String] = {
+  /** Store a DataFrame with the Spark write (the StreamIngest firehose;
+    * types must be line-proto-compatible). It keeps the DataFrame's
+    * executor partitioning — no shuffle, no single-task bottleneck: each
+    * task sorts its slice by (partition cols ++ orderBy) and writes its
+    * own sorted file per (date, hour); the L1→L2 compactor merges the
+    * extra files, which is exactly what it exists for. (Repartitioning on
+    * (date, hour) would NOT scale here: at firehose rates nearly all rows
+    * share the current hour, so that key hashes the whole batch back into
+    * one task.) A caller that needs one file passes `df.coalesce(1)`. */
+  def storeDataFrame(db: String, table: String, df: DataFrame): Seq[String] = {
     val cols = df.schema.fields.map { f =>
       val t = f.dataType match {
         case LongType => "INT64"
@@ -280,59 +272,37 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     }
     // a pre-set __timestamp (the StreamIngest firehose contract) must
     // already be the engine's epoch-ns model, not a lookalike type
-    if (df.columns.contains("__timestamp") &&
-        df.schema("__timestamp").dataType != LongType)
+    val presetTs = df.columns.contains("__timestamp")
+    if (presetTs && df.schema("__timestamp").dataType != LongType)
       throw new IllegalArgumentException(
         s"__timestamp must be INT64 epoch-ns, got " +
           df.schema("__timestamp").dataType.simpleString)
-    guardReservedPartitionCols(db, table, df.columns.toSeq)
+    rejectReserved(db, table, df.columns.toSeq.filterNot(_ == "__timestamp"))
     val spec = catalog.evolve(db, table, cols.toSeq :+ ("__timestamp" -> "INT64"))
-    val withTs = if (df.columns.contains("__timestamp")) df
-      else df.withColumn("__timestamp", lit(nowNs()))
-    // same constant-key argument as store(): only when WE injected the
-    // single-literal arrival stamp (a caller-provided __timestamp
-    // column varies per row and must keep sorting)
-    write(spec, withTs, singleFile,
-      constSorted = if (df.columns.contains("__timestamp")) Set.empty
-                    else Set("__timestamp"))
-  }
-
-  private def write(spec: TableSpec, dfIn: DataFrame,
-                    singleFile: Boolean = true,
-                    constSorted: Set[String] = Set.empty): Seq[String] = {
+    val withTs = if (presetTs) df else df.withColumn("__timestamp", lit(nowNs()))
     // null-pad to the table's full first-seen schema (reference
     // data_store.go:109-141 back-fill)
-    val full = catalog.get(spec.database, spec.name).get
-    val df = full.columns.foldLeft(dfIn) { case (d, (n, t)) =>
+    val padded = spec.columns.foldLeft(withTs) { case (d, (n, t)) =>
       if (d.columns.contains(n)) d else d.withColumn(n, lit(null).cast(sparkType(t)))
-    }.select(full.columns.map(c => col(c._1)): _*)
-
+    }.select(spec.columns.map(c => col(c._1)): _*)
     val hive = spec.engine == "HiveMerge"
-    // reserved date/hour client columns were rejected before
-    // catalog.evolve ran (guardReservedPartitionCols)
     val tsUs = expr("__timestamp DIV 1000")
     val partitioned =
-      if (!hive) df
-      else IngestWriter.PartitionPatterns.foldLeft(df) { case (d, (c, p)) =>
+      if (!hive) padded
+      else IngestWriter.PartitionPatterns.foldLeft(padded) { case (d, (c, p)) =>
         d.withColumn(c, date_format(timestamp_micros(tsUs), p))
       }
     staged(spec, phaseClock()) { staging =>
-      // coalesce(1), not repartition(1): no round-robin exchange. The
-      // parallel (streaming) path sorts each task's slice with the hive
-      // partition cols leading, so every file is ordered within its
-      // dir. Keys the caller proved constant for this batch drop out of
-      // the sort: rows all-equal on a key ARE sorted by it.
-      val sortKeys = spec.orderBy.filterNot(constSorted)
+      // each task sorts its slice with the hive partition cols leading,
+      // so every file is ordered within its dir. Only when WE injected
+      // the single-literal arrival stamp does it drop out of the sort:
+      // rows all-equal on a key ARE sorted by it (a caller-provided
+      // __timestamp varies per row and must keep sorting)
+      val keys = (if (hive) IngestWriter.PartitionPatterns.map(_._1) else Nil) ++
+        spec.orderBy.filterNot(k => k == "__timestamp" && !presetTs)
       val sorted =
-        if (singleFile) {
-          val one = partitioned.coalesce(1)
-          if (sortKeys.isEmpty) one
-          else one.sortWithinPartitions(sortKeys.map(col): _*)
-        } else {
-          val keys = (if (hive) IngestWriter.PartitionPatterns.map(_._1) else Nil) ++ sortKeys
-          if (keys.isEmpty) partitioned
-          else partitioned.sortWithinPartitions(keys.distinct.map(col): _*)
-        }
+        if (keys.isEmpty) partitioned
+        else partitioned.sortWithinPartitions(keys.distinct.map(col): _*)
       val writer = sorted.write.mode("append")
       (if (hive) writer.partitionBy(IngestWriter.PartitionPatterns.map(_._1): _*) else writer)
         .parquet(staging.toString)
@@ -514,9 +484,10 @@ object ParquetStats {
     manifestEntry(spark.sparkContext.hadoopConfiguration, uri, name)
 
   /** Threshold below which footer stats are read inline on the driver:
-    * an HTTP DataFrame write (NDJSON) publishes 1-2 files and a Spark job's
-    * scheduling round-trip would only add flush latency. Above it (the
-    * streaming firehose path: T tasks × P hour-partitions files) stats
+    * a small stream micro-batch (or a spec's DataFrame) publishes 1-2
+    * files and a Spark job's scheduling round-trip would only add latency.
+    * Above it (the streaming firehose path: T tasks × P hour-partitions
+    * files) stats
     * are gathered by ONE Spark job with the footer opens running in
     * executors — the driver never does a per-file loop. */
   private val InlineStatsMax = 4

@@ -1,15 +1,16 @@
 package graft.server
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import scala.collection.mutable
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.lineproto.LineProtocolParser.{Batch, FieldType, Line}
 
 /** Content-Type → body parser registry (reference merge/parsers/
   * parsers.go:10-46: prefix match on the Content-Type, empty string
   * defaults to line protocol). The reference registers an NDJSON parser
   * that is `not implemented` (ndjson_insert_parser.go:17-90, dead code);
-  * ours is a working strict-superset feature per SURVEY §2.1 N3/N4.
+  * ours is a working strict-superset feature per SURVEY §2.1 N3/N4. Both
+  * kinds parse into `Batch`es for the one buffered write path.
   */
 object BodyParsers {
   sealed trait Kind
@@ -25,14 +26,24 @@ object BodyParsers {
   }
 }
 
-/** NDJSON (one JSON object per line) → typed DataFrame for the ingest
-  * writer. Types follow the reference's 4+1 model: integral JSON numbers
-  * → INT64, other numbers → FLOAT64, strings → STRING, booleans → BOOL;
-  * an integral `time` field is int64 ns (the reference time model).
-  * First-type-wins across lines, consistent with schema-on-write.
+/** NDJSON (one JSON object per line) → one line-protocol `Batch` for
+  * the buffered flush, the path line-protocol bodies take. Types follow
+  * the reference's 4+1 model: integral JSON numbers → I64, other numbers
+  * → F64, strings → Str, booleans → Bool. Columns are the body's keys in
+  * first-seen order and the first-seen type wins across lines; a later
+  * integral value in an F64 column widens to a double. Each line carries
+  * only its own keys, so absent keys (and JSON nulls) stay null.
+  *
+  * `time` is the engine's event time, as in line protocol: an integral
+  * `time` (int64 ns; `?precision=` does not apply) becomes the line's
+  * `timeNs` and keeps its first-seen column position; a line without it
+  * gets the arrival time, so a table written only by bodies without
+  * `time` ends in a `time INT64` column. A `time` that is not an
+  * integer is rejected.
   */
 object NdJsonParser {
-  def toDataFrame(spark: SparkSession, body: String): DataFrame = {
+  def parse(body: String, db: String, table: String,
+            nowNs: () => Long = () => System.currentTimeMillis() * 1000000L): Batch = {
     val lines = body.linesIterator.map(_.trim).filter(_.nonEmpty).toVector
     require(lines.nonEmpty, "empty NDJSON body")
     // ORDERED pairs, not a Map: column discovery below must see the
@@ -63,43 +74,40 @@ object NdJsonParser {
           s"NDJSON line is not an object: ${other.getClass.getSimpleName}")
       }
     }
-    // first-seen column order; first-seen type wins (later conflicts cast
-    // where lossless, else rejected by the catalog's evolve check)
-    val columns = Vector.newBuilder[(String, DataType)]
-    val seen = scala.collection.mutable.Map.empty[String, DataType]
+    val schema = mutable.LinkedHashMap.empty[String, FieldType]
     parsed.foreach(_.foreach { case (k, v) =>
-      if (!seen.contains(k)) {
-        val t = v match {
-          case _: Long => LongType
-          case _: Double => DoubleType
-          case _: Boolean => BooleanType
-          case _ => StringType
-        }
-        seen(k) = t
-        columns += (k -> t)
+      if (!schema.contains(k)) schema(k) = v match {
+        case _: Long => FieldType.I64
+        case _: Double => FieldType.F64
+        case _: Boolean => FieldType.Bool
+        case _ => FieldType.Str
       }
     })
-    val schema = StructType(columns.result().map { case (n, t) => StructField(n, t) })
+    schema("time") = FieldType.I64 // first-seen position, else last
     val rows = parsed.map { kvs =>
-      val m = kvs.toMap
-      Row.fromSeq(schema.fields.toIndexedSeq.map { f =>
-        m.get(f.name) match {
-          case None => null
-          case Some(v: Long) if f.dataType == DoubleType => v.toDouble
-          case Some(v) =>
-            val ok = (v, f.dataType) match {
-              case (_: Long, LongType) | (_: Double, DoubleType) |
-                   (_: Boolean, BooleanType) | (_: String, StringType) => true
-              case _ => false
-            }
-            if (!ok) throw new IllegalArgumentException(
-              s"column '${f.name}' type conflict: first-seen ${f.dataType.simpleString}, " +
-                s"got ${v.getClass.getSimpleName}")
-            v
-        }
-      })
+      var timeNs = Option.empty[Long]
+      val fields = kvs.flatMap {
+        case ("time", t: Long) => timeNs = Some(t); None
+        case ("time", v) => throw new IllegalArgumentException(
+          s"NDJSON field 'time' must be an integer (epoch ns), got ${v.getClass.getSimpleName}")
+        case (k, v) => Some((k, (v, schema(k)) match {
+          case (l: Long, FieldType.F64) => l.toDouble
+          case (_: Long, FieldType.I64) | (_: Double, FieldType.F64) |
+               (_: Boolean, FieldType.Bool) | (_: String, FieldType.Str) => v
+          case (_, t) => throw new IllegalArgumentException(
+            s"column '$k' type conflict: first-seen ${sqlName(t)}, " +
+              s"got ${v.getClass.getSimpleName}")
+        }, schema(k)))
+      }
+      Line(db, table, Vector.empty, fields, timeNs.getOrElse(nowNs()))
     }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
+    Batch(db, table, schema.toVector, rows)
+  }
+
+  private def sqlName(t: FieldType): String = t match {
+    case FieldType.I64 => "bigint"
+    case FieldType.F64 => "double"
+    case FieldType.Bool => "boolean"
+    case _ => "string"
   }
 }

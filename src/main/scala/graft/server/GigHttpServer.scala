@@ -172,22 +172,23 @@ final class GigHttpServer(spark: SparkSession, root: String,
     val precision = BadRequest.relabel(
       Precision.of(params.getOrElse("precision", "ns")))
     val contentType = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-    val body = readBody(ex)
-    BodyParsers.dispatch(contentType) match {
-      case BodyParsers.LineProtocol =>
-        // parse strictly BEFORE store: a malformed body is the caller's
-        // 400; a failed durable write stays the engine's 500
-        val parsed = BadRequest.relabel(LineProtocolParser
-          .parse(new String(body, UTF_8), precision, defaultDb = db).toVector)
-        val futures = parsed.map(buffer.store)
-        futures.foreach(Await.result(_, 5.minutes)) // 204 only after durable write
-      case BodyParsers.NdJson =>
-        val table = params.getOrElse("table",
-          throw new BadRequest("NDJSON writes require ?table="))
-        val df = BadRequest.relabel(
-          NdJsonParser.toDataFrame(spark, new String(body, UTF_8)))
-        writer.storeDataFrame(db, table, df): Unit // synchronous durable write
+    val text = new String(readBody(ex), UTF_8)
+    // parse and check strictly BEFORE store: a malformed body or a
+    // reserved column is the caller's 400 and enqueues nothing; a failed
+    // durable write stays the engine's 500
+    val batches = BadRequest.relabel {
+      val parsed = BodyParsers.dispatch(contentType) match {
+        case BodyParsers.LineProtocol =>
+          LineProtocolParser.parse(text, precision, defaultDb = db).toVector
+        case BodyParsers.NdJson =>
+          Vector(NdJsonParser.parse(text, db, params.getOrElse("table",
+            throw new BadRequest("NDJSON writes require ?table="))))
+      }
+      parsed.foreach(b => writer.rejectReserved(b.database, b.table, b.schema.map(_._1)))
+      parsed
     }
+    val futures = batches.map(buffer.store)
+    futures.foreach(Await.result(_, 5.minutes)) // 204 only after durable write
     respond(ex, 204, "", null)
   }
 

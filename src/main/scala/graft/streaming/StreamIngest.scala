@@ -17,7 +17,7 @@ import graft.lineproto.LineProtocolParser.{FieldType, Precision}
   * Unlike the driver-buffered BufferedIngest (reference-shaped), parsing,
   * row materialization AND the sorted parquet write here scale with
   * executor count: each micro-batch keeps its executor partitioning and
-  * every task writes its own sorted file (IngestWriter singleFile=false);
+  * every task writes its own sorted file (IngestWriter.storeDataFrame);
   * only the manifest commit is driver-coordinated.
   */
 object StreamIngest {
@@ -139,10 +139,10 @@ object StreamIngest {
         // local file read, while df.isEmpty launches a Spark job that
         // re-parses the landing files — replayed batches skip for free.
         if (batchId > lastCommitted(writer, spec, guardKey) && !df.isEmpty) {
-          // singleFile = false: each executor task sorts and writes its
-          // own slice (no coalesce(1) bottleneck) — the write scales with
-          // cores and the compactor merges the per-task files
-          writer.storeDataFrame(spec.db, spec.table, df, singleFile = false)
+          // each executor task sorts and writes its own slice (no
+          // coalesce(1) bottleneck) — the write scales with cores and the
+          // compactor merges the per-task files
+          writer.storeDataFrame(spec.db, spec.table, df)
           recordCommitted(writer, spec, guardKey, batchId)
         }
       }

@@ -3,6 +3,8 @@ package graft.ingest
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -14,6 +16,8 @@ import graft.SparkSpec
 import graft.catalog.{TableCatalog, TableSpec}
 import graft.lineproto.LineProtocolParser
 import graft.lineproto.LineProtocolParser.{Batch, FieldType, Line}
+import graft.pruning.GraftFileIndex
+import graft.server.NdJsonParser
 
 /** Pins the buffered line-protocol flush (IngestWriter.store): the batch
   * becomes UnsafeRows on the driver, in parallel chunks, and Spark's own
@@ -304,10 +308,52 @@ class FlushWriteSpec extends SparkSpec {
             "sorted,host=a v=3i 1700000000000000003").foreach(w.store)
       }
       assert(n == 0, s"$n Spark job(s) ran during store(batch)")
+      // an NDJSON body is a Batch on the same flush
+      assert(jobsDuring(w.store(NdJsonParser.parse(
+        "{\"host\":\"a\",\"v\":1.5}\n{\"host\":\"b\",\"ok\":true}", "default", "ndjobs"))) == 0)
       // the probe does see jobs: the DataFrame path keeps its Spark write
       import spark.implicits._
       assert(jobsDuring(w.storeDataFrame("default", "viadf",
         Seq(("a", 1L)).toDF("host", "time"))) > 0)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("NDJSON bodies on BufferedIngest land the schema and rows the DataFrame write did") {
+    val (_, cat, w) = writer()
+    val buffer = new BufferedIngest(w, saveTimeoutMs = 50L)
+    // heterogeneous keys across lines, an F64 column widening a later
+    // integral value, `time` present in one body and absent in the other
+    val withTime =
+      """{"host":"a","v":1,"time":1700000000000000001,"ratio":0.5}
+        |{"host":"b","ratio":2,"ok":true,"time":1700000000000000003}
+        |{"v":3,"time":1700000000000000002,"note":"x"}""".stripMargin
+    val noTime =
+      """{"sensor":"s1","temp":20.5}
+        |{"sensor":"s2","temp":21,"count":7}
+        |{"count":8,"flag":false}""".stripMargin
+    try Seq("withtime" -> withTime, "notime" -> noTime).map { case (t, body) =>
+      buffer.store(NdJsonParser.parse(body, "nd", t, () => t0))
+    }.foreach(Await.result(_, 1.minute))
+    finally buffer.close()
+    def rows(t: String): Seq[String] = {
+      val cols = cat.get("nd", t).get.columns.map(_._1).filterNot(_ == "__timestamp")
+      GraftFileIndex.readTable(spark, cat, "nd", t)
+        .select(cols.map(org.apache.spark.sql.functions.col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    }
+    // expected values: the parent's NdJsonParser.toDataFrame +
+    // storeDataFrame run on the same bodies
+    assert(cat.get("nd", "withtime").get.columns == Seq("host" -> "STRING", "v" -> "INT64",
+      "time" -> "INT64", "ratio" -> "FLOAT64", "ok" -> "BOOL", "note" -> "STRING",
+      "__timestamp" -> "INT64"))
+    assert(rows("withtime") == Seq("a|1|1700000000000000001|0.5|null|null",
+      "b|null|1700000000000000003|2.0|true|null", "null|3|1700000000000000002|null|null|x"))
+    // the one difference: a body without `time` gets the arrival time in
+    // a trailing `time` column, as a line-protocol line without a stamp
+    assert(cat.get("nd", "notime").get.columns == Seq("sensor" -> "STRING",
+      "temp" -> "FLOAT64", "count" -> "INT64", "flag" -> "BOOL", "time" -> "INT64",
+      "__timestamp" -> "INT64"))
+    assert(rows("notime") == Seq(s"null|null|8|false|$t0", s"s1|20.5|null|null|$t0",
+      s"s2|21.0|7|null|$t0"))
   }
 }

@@ -203,7 +203,7 @@ class LakehouseSpec extends SparkSpec {
       "a write must invalidate the cached parse")
   }
 
-  test("storeDataFrame ingests a typed DataFrame (NDJSON-style path)") {
+  test("storeDataFrame ingests a typed DataFrame (firehose write path)") {
     val root = freshRoot()
     val (cat, w) = writer(root)
     import spark.implicits._

@@ -722,6 +722,38 @@ class GigHttpServerSpec extends SparkSpec {
     assert(r.statusCode() == 400 && r.body().contains("table"), r.body())
   }
 
+  test("reserved columns on /write are a 400 before anything is enqueued") {
+    def write(path: String, contentType: String, body: String) =
+      client.send(HttpRequest.newBuilder(URI.create(s"$base$path"))
+        .header("Content-Type", contentType)
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+    val nd = "application/x-ndjson"
+    assert(write("/write?db=rsv", "text/plain", "known v=1i").statusCode() == 204)
+    val known = server.catalog.get("rsv", "known")
+    Seq(
+      // the engine's arrival stamp, as a line-protocol tag and field
+      ("/write?db=rsv", "text/plain", "known,__timestamp=a v=2i", "known"),
+      ("/write?db=rsv", "text/plain", "known v=2i,__timestamp=5i", "known"),
+      ("/write?db=rsv", "text/plain", "fresh __timestamp=5i", "fresh"),
+      // an NDJSON key of that name would forge the stamp
+      ("/write?db=rsv&table=known", nd, """{"v":2,"__timestamp":5}""", "known"),
+      ("/write?db=rsv&table=fresh", nd, """{"v":2,"__timestamp":5}""", "fresh"),
+      // HiveMerge derives date/hour from the stamp
+      ("/write?db=rsv", "text/plain", "known,date=monday v=2i", "known"),
+      ("/write?db=rsv", "text/plain", "known v=2i,hour=3i", "known"),
+      ("/write?db=rsv&table=known", nd, """{"v":2,"date":"monday"}""", "known"),
+      ("/write?db=rsv&table=fresh", nd, """{"v":2,"hour":3}""", "fresh")
+    ).foreach { case (path, ct, body, table) =>
+      val r = write(path, ct, body)
+      assert(r.statusCode() == 400 && r.body().contains("reserved"),
+        s"$body: ${r.statusCode()} ${r.body()}")
+      assert(server.catalog.get("rsv", table) == (if (table == "known") known else None), body)
+    }
+    val q = post("/query?db=rsv", """{"query": "SELECT sum(v) AS s FROM known"}""")
+    assert(q.body().contains(""""s":"1""""), q.body())
+  }
+
   test("bm25 artifact: stats views + match_bm25 scores through /query SQL") {
     val texts = Seq(
       0 -> "alpha beta gamma delta epsilon zeta",
@@ -1122,6 +1154,9 @@ class GigHttpServerSpec extends SparkSpec {
       assert(files.nonEmpty && files.forall(!_.endsWith(".1.parquet")),
         s"L1 files must drain: $files")
       assert(files.size < before.size, s"file count must shrink: $before -> $files")
+      // no further tick: at zero drop grace its gc could delete a merge's
+      // sources under the query below (s2.close() closes it again)
+      s2.merger.close()
       // data survives the unattended merge
       val q = client.send(HttpRequest.newBuilder(URI.create(s"$b2/query"))
         .POST(HttpRequest.BodyPublishers.ofString(

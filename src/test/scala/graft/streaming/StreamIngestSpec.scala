@@ -115,7 +115,7 @@ class StreamIngestSpec extends SparkSpec {
     val df = spark.range(4000).repartition(4).select(
       (col("id") % 7).as("seq"),
       (lit(1700000000000000000L) + col("id") * 1000L).as("time"))
-    val uris = writer.storeDataFrame("default", "par", df, singleFile = false)
+    val uris = writer.storeDataFrame("default", "par", df)
     assert(uris.size == 4, s"expected one file per input task, got ${uris.size}")
 
     // every file individually honors the table's orderBy (time)
@@ -126,12 +126,6 @@ class StreamIngestSpec extends SparkSpec {
     // and the union is complete + readable through the pruned table path
     val all = GraftFileIndex.readTable(spark, cat, "default", "par")
     assert(all.count() == 4000)
-
-    // contrast: the HTTP/buffered flush shape stays single-file
-    val one = writer.storeDataFrame("default", "par1",
-      spark.range(100).repartition(4).select(col("id").as("seq"),
-        (lit(1700000000000000000L) + col("id")).as("time")))
-    assert(one.size == 1)
   }
 
   test("manifest publish is batched: N files, ONE metadata.json rewrite, stats via Spark job") {
@@ -145,7 +139,7 @@ class StreamIngestSpec extends SparkSpec {
     val df = spark.range(8000).repartition(8).select(
       (col("id") % 5).as("seq"),
       (lit(1700000000000000000L) + col("id") * 1000L).as("time"))
-    val uris = writer.storeDataFrame("default", "bp", df, singleFile = false)
+    val uris = writer.storeDataFrame("default", "bp", df)
     assert(uris.size == 8)
 
     // single ingest timestamp -> exactly one (date, hour) partition dir
