@@ -6,8 +6,8 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.catalog.{TableCatalog, TableSpec}
-import graft.index.{FileEntry, MetadataIndex, ParquetLevels}
-import graft.ingest.ParquetStats
+import graft.index.{MetadataIndex, ParquetLevels}
+import graft.ingest.Publish
 import graft.sources.ObjectStore
 
 /** LSM-style leveled compaction (reference N15-N18): per partition dir,
@@ -19,7 +19,9 @@ import graft.sources.ObjectStore
   * caps 100 MB / 400 MB / 4 GB / 4 GB at cadence t, 10t, 100t, 420t.
   *
   * The merge itself is Spark: read(mergeSchema) → sort(orderBy) →
-  * one sorted file. Spark's external sort replaces both the reference's
+  * one sorted file, staged under `{table}/tmp/`; the step every flush
+  * also runs ([[graft.ingest.Publish.staged]]) publishes and commits
+  * it. Spark's external sort replaces both the reference's
   * DuckDB `ORDER BY` copy (L1) and its chsql `read_parquet_mergetree`
   * k-way merge (L≥2) — reference merge_service_fs.go:202-278.
   *
@@ -133,15 +135,18 @@ object Compactor {
         try {
           val fs = plans.map { case (dir, p) =>
             pool.submit(new java.util.concurrent.Callable[String] {
-              def call(): String = executePlan(spark, spec, tableDir, dir, p)
+              // executePlan returns once its manifest commit landed: every
+              // committed plan bumps, so a partial failure never leaves
+              // cached views serving file lists that the next gc deletes
+              def call(): String = {
+                val merged = executePlan(spark, spec, tableDir, dir, p)
+                catalog.bumpVersion(db, table)
+                merged
+              }
             })
           }
           fs.map(f => scala.util.Try(f.get()))
         } finally pool.shutdown()
-      // any committed plan changed the manifest: bump BEFORE propagating a
-      // partial failure, or cached views would serve stale file lists that
-      // the next gc deletes out from under them
-      if (results.exists(_.isSuccess)) catalog.bumpVersion(db, table)
       results.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
     }
     plans.size
@@ -207,101 +212,31 @@ object Compactor {
         col(c1), col(c2))
     }
 
-  /** Copy the staged merge output to its final object key, deleting the
-    * key again if the copy itself fails: a mid-copy failure (transient
-    * network fault) can leave a PARTIAL object at the final key, which
-    * — like the failed-manifest-commit case below — is in no manifest
-    * and on no drop queue, so nothing else would ever delete it; and
-    * planMerge mints a fresh UUID key per retry, so each retry of the
-    * same merge would orphan a new partial on a flaky store. The delete
-    * is best-effort (idempotent; a no-op if nothing was written) and
-    * the original failure propagates. */
-  private[compact] def publishRemote(spark: SparkSession, staged: HPath,
-                                     destUri: String): Unit =
-    try ObjectStore.copyPublish(spark, staged, destUri)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        try ObjectStore.delete(spark, destUri): Unit
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw e
-    }
-
-  /** Merge one plan: sorted single-file output, staged locally then
-    * published (atomic move locally; copy-to-final-key + manifest commit
-    * for object-store tables — reference merge_service_s3.go:73-144
-    * uploads then deletes, no rename); index swaps sources for the merged
-    * file (sources go to the drop queue for deferred deletion). */
+  /** Merge one plan into one sorted file named `plan.to`: the merge's
+    * own part is the mergeSchema read plus [[clusterSort]], written into
+    * the staging dir it is handed (under the partition's path relative to
+    * the table). [[graft.ingest.Publish.staged]] publishes it (atomic
+    * move locally; copy to the final key for object-store tables —
+    * reference merge_service_s3.go:73-144 uploads then deletes, no
+    * rename) and commits one manifest batch that adds it and drop-queues
+    * the sources for deferred deletion. A staging dir a failed cleanup
+    * leaves stays under `{table}/tmp/`. */
   def executePlan(spark: SparkSession, spec: TableSpec, tableDir: Path,
-                  partDir: Path, plan: Plan): String = {
-    // staging on the Hadoop FS API (not java.nio): the merged file is
-    // Spark-written, so on a real cluster it lands on whatever shared FS
-    // the partition URI names — same code for local, HDFS, s3a masters
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val partUri = new HPath(partDir.toUri)
-    val fs = ObjectStore.publishFs(partUri, hconf)
-    val staging = new HPath(partUri, s".merge-${UUID.randomUUID()}")
-    try {
+                  partDir: Path, plan: Plan): String =
+    Publish.staged(spark, spec, tableDir, name = Some(plan.to),
+      // normalize separators before taking the basename (review r10,
+      // the ObjectStore.dataUri convention): on a platform-native
+      // local path lastIndexOf('/') would return the WHOLE path,
+      // the manifest remove would silently no-op, and every tick
+      // would re-merge the same still-live sources
+      remove = plan.from.map { u =>
+        val n = u.replace('\\', '/'); n.substring(n.lastIndexOf('/') + 1)
+      }) { staging =>
+      val rel = tableDir.relativize(partDir).toString.replace('\\', '/')
       clusterSort(spark.read
         .option("mergeSchema", "true")
         .parquet(plan.from: _*), spec)
-        .write.mode("overwrite").parquet(staging.toString)
-      val part = fs.listStatus(staging).toSeq
-        .find(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-        .getOrElse(throw new IllegalStateException(s"no merged output in $staging"))
-      // footer stats from the STAGED bytes, before publish (the
-      // IngestWriter rule: publish never rewrites them) — for remote
-      // tables reading from destUri would re-open the footer over S3
-      // right after uploading those same bytes from here
-      val entry = ParquetStats.manifestEntry(spark, part.toString, plan.to)
-      val destUri = spec.dataUrl match {
-        case Some(_) =>
-          val u = ObjectStore.dataUri(spark, spec, tableDir, partDir, plan.to)
-          publishRemote(spark, part, u)
-          u
-        case None =>
-          val dest = new HPath(partUri, plan.to)
-          ObjectStore.publishRename(fs, part, dest)
-          dest.toUri.getPath
-      }
-      try MetadataIndex.batch(partDir, spec.name,
-        add = Seq(entry),
-        // normalize separators before taking the basename (review r10,
-        // the ObjectStore.dataUri convention): on a platform-native
-        // local path lastIndexOf('/') would return the WHOLE path,
-        // the manifest remove would silently no-op, and every tick
-        // would re-merge the same still-live sources
-        remove = plan.from.map { u =>
-          val n = u.replace('\\', '/'); n.substring(n.lastIndexOf('/') + 1)
-        })
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // un-publish on a failed manifest commit: a published file in
-          // NO manifest is invisible AND unreachable by the drop queue,
-          // so it would leak forever (unbounded at the remote store on
-          // a flaky table — the staging-cleanup argument applies to the
-          // final key too)
-          try {
-            if (spec.dataUrl.isDefined) ObjectStore.delete(spark, destUri)
-            else fs.delete(new HPath(partUri, plan.to), false)
-          } catch { case scala.util.control.NonFatal(_) => () }
-          throw e
-      }
-      destUri
-    } finally {
-      // cleanup must not turn a COMMITTED plan into a Failure (review
-      // r10): the manifest batch is already durable at this point, and
-      // a throwing delete would suppress the caller's bumpVersion —
-      // cached query snapshots would then keep serving the removed
-      // source files until the next gc unlinks them (FileNotFound on
-      // every query of an otherwise idle table). A leaked dot-prefixed
-      // staging dir is invisible to manifest-driven reads — wasted
-      // space, never wrong results.
-      try fs.delete(staging, true): Unit
-      catch {
-        case scala.util.control.NonFatal(e) => System.err.println(
-          s"[graft] compactor: staging cleanup failed (will re-sweep): $e")
-      }
-    }
-  }
+        .write.mode("overwrite")
+        .parquet((if (rel.isEmpty) staging else new HPath(staging, rel)).toString)
+    }.head
 }

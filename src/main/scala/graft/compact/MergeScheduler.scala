@@ -65,12 +65,10 @@ final class MergeScheduler(spark: SparkSession, catalog: TableCatalog,
         }
         val merged = Compactor.compactTable(spark, catalog, spec.database,
           spec.name, levels = due, graceMs = graceMs)
-        // prune-only sweep AFTER compactTable: its gc pass (which owns
-        // the object-store deleter) already drained due drop-queue
-        // entries this tick — no second gc walk, no duplicated deleter
+        // sweep AFTER compactTable: its gc pass (which owns the
+        // object-store deleter) already drained due drop-queue entries
         if (retentionNs(spec.database, spec.name).isDefined)
-          RetentionEnforcer.sweep(catalog.tableDir(spec.database, spec.name),
-            spec.name, graceMs, runGc = false)
+          RetentionEnforcer.sweep(catalog.tableDir(spec.database, spec.name), spec.name)
         merged
       } catch {
         case NonFatal(e) =>

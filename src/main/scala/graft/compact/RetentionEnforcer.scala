@@ -18,9 +18,9 @@ import scala.jdk.CollectionConverters._
   * and expiry just moves the partition's live files onto the existing
   * drop queue — the same 30 s-grace GC that protects in-flight readers
   * from compaction deletes protects them from retention deletes.
-  * `sweep` then physically deletes due files and prunes drained
-  * partition dirs (manifest last) so the `date=/hour=` tree shrinks as
-  * data ages out.
+  * Once that GC has deleted the files, `sweep` prunes drained partition
+  * dirs (manifest last) so the `date=/hour=` tree shrinks as data ages
+  * out.
   *
   * At 100 TB: enforcement reads only manifests (no data IO) — one
   * metadata.json per partition, pruned by the same cached parses the
@@ -46,22 +46,13 @@ object RetentionEnforcer {
     }
   }
 
-  /** GC due drop-queue entries table-wide, then remove partition dirs
-    * that are fully drained (no live files, no queued deletes, nothing
-    * on disk but the manifest) and any empty `date=` parents.
-    *
-    * `deleteFor` mirrors the compactor's GC hook: for object-store
-    * tables it must return the remote deleter (ObjectStore.delete over
-    * dataUri) or retention would drain manifests while leaking the
-    * remote bytes; None (default) unlinks next to the manifest. */
-  def sweep(tableRoot: Path, tableName: String,
-            graceMs: Long = MetadataIndex.DropGraceMs,
-            nowMs: Long = System.currentTimeMillis(),
-            deleteFor: Path => Option[String => Unit] = _ => None,
-            runGc: Boolean = true): Unit = {
+  /** Remove partition dirs that are fully drained (no live files, no
+    * queued deletes, nothing on disk but the manifest) and any empty
+    * `date=` parents. Deleting due drop-queue files is
+    * `MetadataIndex.gc`'s job (compactTable runs it every tick, with
+    * the object-store deleter). */
+  def sweep(tableRoot: Path, tableName: String): Unit = {
     MetadataIndex.partitionDirs(tableRoot).foreach { dir =>
-      if (runGc)
-        MetadataIndex.gc(dir, tableName, graceMs, nowMs, delete = deleteFor(dir))
       // prune INSIDE the manifest monitor: batch/gc hold the same lock,
       // so a concurrent ingest commit can't land between the emptiness
       // re-check and the manifest delete (it would either commit first —

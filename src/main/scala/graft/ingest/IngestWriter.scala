@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.hadoop.conf.Configuration
@@ -11,10 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.catalog.{TableCatalog, TableSpec}
-import graft.index.{FileEntry, MetadataIndex}
+import graft.index.FileEntry
 import graft.ingest.IngestWriter.RowChunk
 import graft.lineproto.LineProtocolParser.{Batch, FieldType}
-import graft.sources.ObjectStore
 
 /** The schema-on-write ingest path (reference write pipeline §3.1):
   * schema evolution → `__timestamp` injection → date/hour partition
@@ -22,14 +20,15 @@ import graft.sources.ObjectStore
   * `{root}/{db}/{table}/date=YYYY-MM-DD/hour=HH/{uuid}.1.parquet` →
   * metadata.json index update.
   *
-  * The batch flush and the firehose DataFrame write share staging,
-  * publish and the manifest commit. A buffered flush (`store`: every
-  * HTTP body, line protocol or NDJSON) holds its rows in driver memory
-  * and carries one arrival stamp, so one partition dir: its rows become
-  * UnsafeRows on the driver and Spark's Parquet writer encodes them in
-  * the flush thread, with no Spark job. A DataFrame (`storeDataFrame`:
-  * StreamIngest) keeps the Spark write, whose tasks read and partition
-  * the data where it lives.
+  * The batch flush, the firehose DataFrame write and compaction share
+  * one staging, publish and manifest-commit step ([[Publish.staged]]);
+  * each only writes its parquet into the staging dir. A buffered flush
+  * (`store`: every HTTP body, line protocol or NDJSON) holds its rows in
+  * driver memory and carries one arrival stamp, so one partition dir:
+  * its rows become UnsafeRows on the driver and Spark's Parquet writer
+  * encodes them in the flush thread, with no Spark job. A DataFrame
+  * (`storeDataFrame`: StreamIngest) keeps the Spark write, whose tasks
+  * read and partition the data where it lives.
   *
   * Differences from the reference, by design (SURVEY §2.1 quirks):
   *  - date AND hour derive per-row from `__timestamp` (the reference
@@ -195,9 +194,11 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     out.close()
   }
 
-  /** Client columns the engine owns, rejected before catalog.evolve
-    * persists anything (and, on `/write`, before anything is enqueued):
-    * a reserved column in the spec would poison every later write.
+  /** Names and client columns the engine refuses, rejected before
+    * catalog.evolve persists anything (and, on `/write`, before anything
+    * is enqueued). A db or table name outside `TableCatalog.NameRe`
+    * would fail only in the flush, as the engine's fault; a reserved
+    * column in the spec would poison every later write.
     * `__timestamp` is the arrival stamp: a client column of that name
     * would lose its values to the stamp, or forge it. On HiveMerge tables
     * `date`/`hour` are derived partition columns: the write would replace
@@ -206,6 +207,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     * evolve's default engine (HiveMerge). `catalog.get` is memory-first:
     * no I/O on a known table. */
   private[graft] def rejectReserved(db: String, table: String, names: Seq[String]): Unit = {
+    require(TableCatalog.NameRe.matches(db), s"invalid database name: $db")
+    require(TableCatalog.NameRe.matches(table), s"invalid table name: $table")
     if (names.contains("__timestamp"))
       throw new IllegalArgumentException(
         "column '__timestamp' is reserved (engine arrival time); " +
@@ -234,12 +237,15 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     // the stats a footer read of this file returns
     val stats = ParquetStats.Stats(batch.size.toLong, tsNs, tsNs,
       Map("time" -> (chunks.map(_.minTime).min, chunks.map(_.maxTime).max)))
-    staged(spec, mark, Some(stats)) { staging =>
+    val uris = Publish.staged(spark, spec, catalog.tableDir(spec.database, spec.name),
+        mark, Some(stats)) { staging =>
       val dir = if (spec.engine != "HiveMerge") staging
         else new HPath(staging, IngestWriter.partitionDir(tsNs,
           spark.sessionState.conf.sessionLocalTimeZone))
       writeParquet(dir, schema, fileRows(spec, schema, chunks))
     }
+    catalog.bumpVersion(spec.database, spec.name)
+    uris
   }
 
   /** Store a DataFrame with the Spark write (the StreamIngest firehose;
@@ -292,7 +298,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       else IngestWriter.PartitionPatterns.foldLeft(padded) { case (d, (c, p)) =>
         d.withColumn(c, date_format(timestamp_micros(tsUs), p))
       }
-    staged(spec, phaseClock()) { staging =>
+    val uris = Publish.staged(spark, spec, catalog.tableDir(spec.database, spec.name),
+        phaseClock()) { staging =>
       // each task sorts its slice with the hive partition cols leading,
       // so every file is ordered within its dir. Only when WE injected
       // the single-literal arrival stamp does it drop out of the sort:
@@ -307,6 +314,8 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       (if (hive) writer.partitionBy(IngestWriter.PartitionPatterns.map(_._1): _*) else writer)
         .parquet(staging.toString)
     }
+    catalog.bumpVersion(spec.database, spec.name)
+    uris
   }
 
   /** Per-phase wall clock under GRAFT_FLUSH_DEBUG: each `mark(phase)`
@@ -317,106 +326,6 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       var t = System.nanoTime()
       phase => { val now = System.nanoTime(); println(f"[wdbg] $phase=${(now - t) / 1e9}%.3f"); t = now }
     }
-
-  /** Run `stage` into a fresh `tmp/{uuid}` staging dir, then publish
-    * every staged parquet file under its reference-style name and
-    * commit the manifests. `known` is the stats of a stage that writes
-    * one file; without it the entries come from the staged footers.
-    * Local tables: atomic move. Object-store tables (spec.dataUrl):
-    * bytes are copied to their FINAL key and the
-    * metadata.json manifest is the commit — no rename exists on S3
-    * (reference save_service_s3.go:55-88). Staging runs on the Hadoop
-    * FileSystem API, not java.nio, so a Spark write on a cluster can
-    * stage on shared HDFS/s3a: only the table root URI changes. */
-  private def staged(spec: TableSpec, mark: String => Unit,
-                     known: Option[ParquetStats.Stats] = None)(stage: HPath => Unit): Seq[String] = {
-    val tableDir = catalog.tableDir(spec.database, spec.name)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tableUri = new HPath(tableDir.toUri)
-    val fs = ObjectStore.publishFs(tableUri, hconf)
-    val staging = new HPath(new HPath(tableUri, "tmp"), UUID.randomUUID().toString)
-    fs.mkdirs(staging)
-    // removed in finally: a failed write or publish must not leak
-    // tmp/{uuid} partial parquet at a 1 s flush cadence
-    try {
-    stage(staging)
-    mark("encode")
-
-    // ONE spelling of the remote key layout (ObjectStore owns it): a
-    // divergent inline reassembly here would publish to keys the
-    // dataUri-based readers and the GC deleter could never find
-    val remoteRoot = ObjectStore.tableRemoteRoot(spark, spec)
-    val stagingStr = staging.toString
-    // listStatus, not listFiles: a LocatedFileStatus copies each entry's
-    // permissions, which Hadoop's local FS without its native library
-    // loads by running `ls -ld` per file and dir — a process spawn each
-    def parquetUnder(dir: HPath): Vector[(HPath, Long)] =
-      fs.listStatus(dir).toVector.flatMap { st =>
-        if (st.isDirectory) parquetUnder(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Vector(st.getPath -> st.getLen)
-        else Vector.empty
-      }
-    val written = parquetUnder(staging)
-    // final names up front: footer stats read the STAGED bytes (publish
-    // never rewrites them), for all files at once
-    val planned = written.map { case (part, _) =>
-      val rel = part.getParent.toString.stripPrefix(stagingStr)
-        .stripPrefix("/") // "" or date=../hour=..
-      (part, rel, s"${UUID.randomUUID()}.1.parquet")
-    }
-    val entries: Map[String, FileEntry] = known match {
-      case Some(stats) =>
-        require(written.size == 1, s"${written.size} files staged for one set of stats")
-        Map(planned.head._3 -> ParquetStats.entry(planned.head._3, written.head._2, stats))
-      case None => ParquetStats.manifestEntries(
-        spark, planned.map { case (p, _, name) => (p.toString, name) })
-    }
-    mark("stats")
-    // published-but-not-yet-committed URIs: a failure before the
-    // manifest commit would leak final-key objects no manifest or drop
-    // queue can ever reclaim
-    val uncommitted = scala.collection.mutable.LinkedHashSet.empty[String]
-    try {
-    val out = planned.map { case (part, rel, name) =>
-      val uri = remoteRoot match {
-        case Some(r) =>
-          val u = r + (if (rel.isEmpty) "" else "/" + rel) + "/" + name
-          ObjectStore.copyPublish(spark, part, u)
-          u
-        case None =>
-          val destDir = if (rel.isEmpty) tableUri else new HPath(tableUri, rel)
-          fs.mkdirs(destDir)
-          val dest = new HPath(destDir, name)
-          ObjectStore.publishRename(fs, part, dest)
-          dest.toUri.getPath
-      }
-      uncommitted += uri
-      (rel, name, uri)
-    }
-    mark("publish")
-
-    // ONE manifest commit per partition dir (reference applies adds/removes
-    // in a single index Batch — json_index.go:312-416): N files into a
-    // partition is one read-modify-write of its metadata.json, not N. For
-    // remote tables this manifest write IS what makes the files visible.
-    out.groupBy(_._1).foreach { case (rel, group) =>
-      val dir = if (rel.isEmpty) tableDir else tableDir.resolve(rel)
-      MetadataIndex.batch(dir, spec.name, add = group.map { case (_, n, _) => entries(n) })
-      group.foreach { case (_, _, u) => uncommitted -= u }
-    }
-    catalog.bumpVersion(spec.database, spec.name)
-    mark("commit")
-    out.map(_._3)
-    } catch {
-      case NonFatal(e) =>
-        uncommitted.foreach { u =>
-          try ObjectStore.delete(spark, u)
-          catch { case NonFatal(_) => () }
-        }
-        throw e
-    }
-    } finally fs.delete(staging, true)
-  }
 }
 
 object IngestWriter {

@@ -18,11 +18,13 @@ import org.apache.spark.sql.SparkSession
   * FINAL key (the reference's PutObject, save_service_s3.go:55-88), and
   * visibility is gated by the partition's metadata.json manifest — a file
   * is part of the table iff the index lists it, so a half-uploaded object
-  * is simply invisible. Replaced files go to the drop queue and are
-  * deleted after the grace period (merge_service_s3.go:125-143 deletes
-  * post-upload; we add the FS path's 30 s grace, which S3 needs even
-  * more). `file://` URLs run the exact same copy-publish path — that is
-  * what the spec exercises hermetically.
+  * is simply invisible, and `copyPublish` deletes it. Replaced files go
+  * to the drop queue and are deleted after the grace period
+  * (merge_service_s3.go:125-143 deletes post-upload; we add the FS
+  * path's 30 s grace, which S3 needs even more). `file://` URLs run the
+  * exact same copy-publish path — that is what the spec exercises
+  * hermetically. graft.ingest.Publish runs this protocol for the flush,
+  * the firehose write and the merge alike.
   */
 object ObjectStore {
 
@@ -168,14 +170,26 @@ object ObjectStore {
   /** Copy a staged file to its FINAL object key (PutObject semantics; no
     * rename). Overwrite is safe: keys embed a fresh UUID. Source rides
     * the Hadoop FS API too, so staging may live on any shared FS (local,
-    * HDFS) while the destination is an object store. */
+    * HDFS) while the destination is an object store. A failed copy
+    * deletes the key again before the failure propagates: a mid-copy
+    * fault can leave a PARTIAL object there, in no manifest and on no
+    * drop queue, and every retry mints a fresh key, so nothing else
+    * would ever delete it. The delete is best-effort (a no-op if nothing
+    * was written). */
   def copyPublish(spark: SparkSession, src: HPath, destUri: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dest = new HPath(destUri)
     val destFs = fs(spark, destUri)
-    destFs.mkdirs(dest.getParent)
-    org.apache.hadoop.fs.FileUtil.copy(
-      src.getFileSystem(conf), src, destFs, dest, false, true, conf)
+    try {
+      destFs.mkdirs(dest.getParent)
+      org.apache.hadoop.fs.FileUtil.copy(
+        src.getFileSystem(conf), src, destFs, dest, false, true, conf): Unit
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        try destFs.delete(dest, false): Unit
+        catch { case scala.util.control.NonFatal(_) => () }
+        throw e
+    }
   }
 
   def delete(spark: SparkSession, uri: String): Boolean =

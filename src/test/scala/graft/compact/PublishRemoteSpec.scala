@@ -1,15 +1,18 @@
 package graft.compact
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import graft.SparkSpec
+import graft.sources.ObjectStore
 
 /** The copy-publish failure contract (review r15): a mid-copy failure can
   * leave a partial object at the FINAL key — in no manifest, on no drop
-  * queue — and planMerge mints a fresh UUID key per retry, so each retry
-  * would orphan a new partial. publishRemote must delete the key again
-  * before propagating the failure. Driven hermetically over file://, the
-  * same code path as S3 (ObjectStore.scala scaladoc). */
+  * queue — and every retry mints a fresh UUID key, so each retry would
+  * orphan a new partial. copyPublish must delete the key again before
+  * propagating the failure; the flush and the merge both publish through
+  * it (graft.ingest.Publish). Driven hermetically over file://, the same
+  * code path as S3 (ObjectStore.scala scaladoc). */
 class PublishRemoteSpec extends SparkSpec {
 
   test("a failed copy-publish deletes the partial object at the final key") {
@@ -19,7 +22,7 @@ class PublishRemoteSpec extends SparkSpec {
     Files.writeString(dest, "partial bytes from the failed copy")
     val missingSrc = new HPath(dir.resolve("no-such-staged-file").toUri)
     intercept[Exception] {
-      Compactor.publishRemote(spark, missingSrc, dest.toUri.toString)
+      ObjectStore.copyPublish(spark, missingSrc, dest.toUri.toString)
     }
     assert(!Files.exists(dest), s"partial object leaked at $dest")
   }
@@ -29,7 +32,23 @@ class PublishRemoteSpec extends SparkSpec {
     val src = dir.resolve("staged.parquet")
     Files.writeString(src, "merged bytes")
     val dest = dir.resolve("out/0a1b2c3d.2.parquet")
-    Compactor.publishRemote(spark, new HPath(src.toUri), dest.toUri.toString)
+    ObjectStore.copyPublish(spark, new HPath(src.toUri), dest.toUri.toString)
     assert(Files.readString(dest) == "merged bytes")
+  }
+
+  test("only graft.ingest.Publish publishes files or commits manifest adds in src/main") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    // calls, not ObjectStore's definitions; a remove-only batch
+    // (RetentionEnforcer's expiry) publishes nothing and stays allowed
+    val step = """(?<!def )\b(publishRename|copyPublish)\(|MetadataIndex\.batch\([^)]*\badd\s*=""".r
+    val s = Files.walk(root)
+    val hits =
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          step.findFirstIn(Files.readString(p)).isDefined)
+        .map(p => root.relativize(p).toString).toList
+      finally s.close()
+    assert(hits == Seq("graft/ingest/Publish.scala"), hits)
   }
 }

@@ -14,6 +14,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.catalog.{TableCatalog, TableSpec}
+import graft.compact.Compactor
+import graft.index.MetadataIndex
 import graft.lineproto.LineProtocolParser
 import graft.lineproto.LineProtocolParser.{Batch, FieldType, Line}
 import graft.pruning.GraftFileIndex
@@ -212,16 +214,31 @@ class FlushWriteSpec extends SparkSpec {
     // an order_by key the table has never seen fails inside the write,
     // after staging was created
     cat.upsert(TableSpec("default", "bad", orderBy = Seq("nosuch")))
-    val e = intercept[IllegalArgumentException] {
-      LineProtocolParser.parse("bad v=1i 1700000000000000001").foreach(w.store)
+    // a merge whose plan names a source that is gone fails in its read;
+    // it stages and commits through the same step as the flush
+    LineProtocolParser.parse("m v=1i 1700000000000000001").foreach(w.store)
+    val (mSpec, mDir) = (cat.get("default", "m").get, cat.tableDir("default", "m"))
+    val part = MetadataIndex.partitionDirs(mDir).head
+    val sources = Compactor.filesToMerge(spark, mSpec, mDir, part, 1).map(_._1) :+
+      part.resolve("gone.1.parquet").toString
+    Seq[(String, () => Any, String)](
+      ("bad", () => LineProtocolParser.parse("bad v=1i 1700000000000000001").foreach(w.store),
+        "nosuch"),
+      ("m", () => Compactor.executePlan(spark, mSpec, mDir, part,
+        Compactor.Plan(sources, "merged.2.parquet", 1)), "gone.1.parquet")
+    ).foreach { case (table, fail, msg) =>
+      val tableDir = root.resolve(s"default/$table")
+      def parquet() = Files.walk(tableDir).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toSet
+      def manifests() = MetadataIndex.partitionDirs(tableDir).map(MetadataIndex.load(_, table))
+      val (parquet0, manifests0) = (parquet(), manifests())
+      val e = intercept[Exception](fail())
+      assert(e.getMessage.contains(msg), e.getMessage)
+      val tmp = tableDir.resolve("tmp")
+      assert(!Files.exists(tmp) || Files.list(tmp).count() == 0, table)
+      assert(parquet() == parquet0, table)
+      assert(manifests() == manifests0, table)
     }
-    assert(e.getMessage.contains("nosuch"))
-    val tableDir = root.resolve("default/bad")
-    val tmp = tableDir.resolve("tmp")
-    assert(!Files.exists(tmp) || Files.list(tmp).count() == 0)
-    val parquet = Files.walk(tableDir).iterator().asScala
-      .filter(_.toString.endsWith(".parquet")).toSeq
-    assert(parquet.isEmpty, parquet)
   }
 
   test("the writer-built manifest entry equals the footer-read one on random batches") {

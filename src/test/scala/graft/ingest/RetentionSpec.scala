@@ -19,6 +19,12 @@ class RetentionSpec extends AnyFunSuite {
     dir
   }
 
+  /** The drop-queue GC the scheduler's compactTable runs before sweep. */
+  private def gcAll(root: Path, graceMs: Long, nowMs: Long = System.currentTimeMillis(),
+                    delete: Path => Option[String => Unit] = _ => None): Unit =
+    MetadataIndex.partitionDirs(root).foreach(d =>
+      MetadataIndex.gc(d, "t", graceMs, nowMs, delete = delete(d)))
+
   test("enforce queues only fully-expired partitions; sweep deletes after grace and prunes dirs") {
     val root = Files.createTempDirectory("graft-ttl")
     val nowNs = 1000L * 1000000000L
@@ -39,14 +45,14 @@ class RetentionSpec extends AnyFunSuite {
     assert(MetadataIndex.load(straddle, "t").entries.nonEmpty)
     assert(MetadataIndex.load(fresh, "t").entries.nonEmpty)
 
-    // before grace: sweep must delete nothing
-    RetentionEnforcer.sweep(root, "t", graceMs = 30000L,
-      nowMs = System.currentTimeMillis())
+    // before grace: gc + sweep must delete nothing
+    gcAll(root, graceMs = 30000L)
+    RetentionEnforcer.sweep(root, "t")
     assert(Files.exists(old.resolve("a.1.parquet")))
 
     // after grace: file deleted, drained dir + empty date= parent pruned
-    RetentionEnforcer.sweep(root, "t", graceMs = 0L,
-      nowMs = System.currentTimeMillis() + 1)
+    gcAll(root, graceMs = 0L, nowMs = System.currentTimeMillis() + 1)
+    RetentionEnforcer.sweep(root, "t")
     assert(!Files.exists(old), "drained partition dir should be pruned")
     assert(!Files.exists(root.resolve("date=2024-01-01")), "empty date dir pruned")
     assert(Files.exists(straddle.resolve("a.1.parquet")))
@@ -54,7 +60,8 @@ class RetentionSpec extends AnyFunSuite {
 
     // idempotent: a second pass is a no-op
     assert(RetentionEnforcer.enforce(root, "t", 500L * 1000000000L, nowNs).isEmpty)
-    RetentionEnforcer.sweep(root, "t", graceMs = 0L)
+    gcAll(root, graceMs = 0L)
+    RetentionEnforcer.sweep(root, "t")
     assert(Files.exists(straddle) && Files.exists(fresh))
   }
 
@@ -70,7 +77,7 @@ class RetentionSpec extends AnyFunSuite {
       retentionNs = (_, _) => Some(86400L * 1000000000L))
     try {
       val v0 = catalog.version("db", "m")
-      sched.tick() // enforce queues the drop; sweep GCs at grace 0
+      sched.tick() // enforce queues the drop; compactTable GCs at grace 0
       sched.tick() // second beat prunes the drained dir
       assert(!Files.exists(tdir.resolve("date=1970-01-01/hour=00")))
       // expiry must invalidate cached query views, like ingest/compaction
@@ -86,9 +93,9 @@ class RetentionSpec extends AnyFunSuite {
     MetadataIndex.batch(dir, "t", add = Seq(FileEntry(0, "a.1.parquet", 3, 1, 1, 1, 2)))
     RetentionEnforcer.enforce(root, "t", maxAgeNs = 1L, nowNs = 1000L * 1000000000L)
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
-    RetentionEnforcer.sweep(root, "t", graceMs = 0L,
-      nowMs = System.currentTimeMillis() + 1,
-      deleteFor = d => Some(p => { deleted += s"${d.getFileName}/$p"; () }))
+    gcAll(root, graceMs = 0L, nowMs = System.currentTimeMillis() + 1,
+      delete = d => Some(p => { deleted += s"${d.getFileName}/$p"; () }))
+    RetentionEnforcer.sweep(root, "t")
     assert(deleted == Seq("hour=00/a.1.parquet"), deleted)
     assert(!Files.exists(dir), "drained dir pruned after remote delete")
   }

@@ -722,12 +722,13 @@ class GigHttpServerSpec extends SparkSpec {
     assert(r.statusCode() == 400 && r.body().contains("table"), r.body())
   }
 
+  private def write(path: String, contentType: String, body: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(URI.create(s"$base$path"))
+      .header("Content-Type", contentType)
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
   test("reserved columns on /write are a 400 before anything is enqueued") {
-    def write(path: String, contentType: String, body: String) =
-      client.send(HttpRequest.newBuilder(URI.create(s"$base$path"))
-        .header("Content-Type", contentType)
-        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
-        HttpResponse.BodyHandlers.ofString())
     val nd = "application/x-ndjson"
     assert(write("/write?db=rsv", "text/plain", "known v=1i").statusCode() == 204)
     val known = server.catalog.get("rsv", "known")
@@ -751,6 +752,23 @@ class GigHttpServerSpec extends SparkSpec {
       assert(server.catalog.get("rsv", table) == (if (table == "known") known else None), body)
     }
     val q = post("/query?db=rsv", """{"query": "SELECT sum(v) AS s FROM known"}""")
+    assert(q.body().contains(""""s":"1""""), q.body())
+  }
+
+  test("invalid table or db names on /write are a 400 before anything is enqueued") {
+    assert(write("/write?db=nm", "text/plain", "known v=1i").statusCode() == 204)
+    val tables = server.catalog.all().toSet
+    Seq(
+      ("/write?db=nm", "text/plain", "a-b v=2i"),
+      ("/write?db=nm", "text/plain", "bad-db.t v=2i"),
+      ("/write?db=nm&table=a-b", "application/x-ndjson", """{"v":2}""")
+    ).foreach { case (path, ct, body) =>
+      val r = write(path, ct, body)
+      assert(r.statusCode() == 400 && r.body().contains("invalid"),
+        s"$body: ${r.statusCode()} ${r.body()}")
+      assert(server.catalog.all().toSet == tables, body)
+    }
+    val q = post("/query?db=nm", """{"query": "SELECT sum(v) AS s FROM known"}""")
     assert(q.body().contains(""""s":"1""""), q.body())
   }
 
