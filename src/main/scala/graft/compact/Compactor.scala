@@ -135,14 +135,8 @@ object Compactor {
         try {
           val fs = plans.map { case (dir, p) =>
             pool.submit(new java.util.concurrent.Callable[String] {
-              // executePlan returns once its manifest commit landed: every
-              // committed plan bumps, so a partial failure never leaves
-              // cached views serving file lists that the next gc deletes
-              def call(): String = {
-                val merged = executePlan(spark, spec, tableDir, dir, p)
-                catalog.bumpVersion(db, table)
-                merged
-              }
+              def call(): String = executePlan(spark, spec, tableDir, dir, p,
+                () => catalog.bumpVersion(db, table))
             })
           }
           fs.map(f => scala.util.Try(f.get()))
@@ -214,16 +208,14 @@ object Compactor {
 
   /** Merge one plan into one sorted file named `plan.to`: the merge's
     * own part is the mergeSchema read plus [[clusterSort]], written into
-    * the staging dir it is handed (under the partition's path relative to
-    * the table). [[graft.ingest.Publish.staged]] publishes it (atomic
-    * move locally; copy to the final key for object-store tables —
-    * reference merge_service_s3.go:73-144 uploads then deletes, no
-    * rename) and commits one manifest batch that adds it and drop-queues
-    * the sources for deferred deletion. A staging dir a failed cleanup
+    * the staging dir [[graft.ingest.Publish.staged]] hands it (under the
+    * partition's path relative to the table). That step publishes the
+    * file and commits it with the sources as the manifest's removes;
+    * `onCommit` runs once it landed. A staging dir that a failed cleanup
     * leaves stays under `{table}/tmp/`. */
   def executePlan(spark: SparkSession, spec: TableSpec, tableDir: Path,
-                  partDir: Path, plan: Plan): String =
-    Publish.staged(spark, spec, tableDir, name = Some(plan.to),
+                  partDir: Path, plan: Plan, onCommit: () => Unit = () => ()): String =
+    Publish.staged(spark, spec, tableDir, onCommit, name = Some(plan.to),
       // normalize separators before taking the basename (review r10,
       // the ObjectStore.dataUri convention): on a platform-native
       // local path lastIndexOf('/') would return the WHOLE path,

@@ -237,15 +237,12 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
     // the stats a footer read of this file returns
     val stats = ParquetStats.Stats(batch.size.toLong, tsNs, tsNs,
       Map("time" -> (chunks.map(_.minTime).min, chunks.map(_.maxTime).max)))
-    val uris = Publish.staged(spark, spec, catalog.tableDir(spec.database, spec.name),
-        mark, Some(stats)) { staging =>
+    publish(spec, mark, Some(stats)) { staging =>
       val dir = if (spec.engine != "HiveMerge") staging
         else new HPath(staging, IngestWriter.partitionDir(tsNs,
           spark.sessionState.conf.sessionLocalTimeZone))
       writeParquet(dir, schema, fileRows(spec, schema, chunks))
     }
-    catalog.bumpVersion(spec.database, spec.name)
-    uris
   }
 
   /** Store a DataFrame with the Spark write (the StreamIngest firehose;
@@ -298,8 +295,7 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       else IngestWriter.PartitionPatterns.foldLeft(padded) { case (d, (c, p)) =>
         d.withColumn(c, date_format(timestamp_micros(tsUs), p))
       }
-    val uris = Publish.staged(spark, spec, catalog.tableDir(spec.database, spec.name),
-        phaseClock()) { staging =>
+    publish(spec, phaseClock()) { staging =>
       // each task sorts its slice with the hive partition cols leading,
       // so every file is ordered within its dir. Only when WE injected
       // the single-literal arrival stamp does it drop out of the sort:
@@ -314,9 +310,15 @@ final class IngestWriter(spark: SparkSession, root: String, catalog: TableCatalo
       (if (hive) writer.partitionBy(IngestWriter.PartitionPatterns.map(_._1): _*) else writer)
         .parquet(staging.toString)
     }
-    catalog.bumpVersion(spec.database, spec.name)
-    uris
   }
+
+  /** [[Publish.staged]] into this catalog's table dir; each commit bumps
+    * the table's version so cached query views re-list. */
+  private def publish(spec: TableSpec, mark: String => Unit,
+                      known: Option[ParquetStats.Stats] = None)
+                     (stage: HPath => Unit): Seq[String] =
+    Publish.staged(spark, spec, catalog.tableDir(spec.database, spec.name),
+      () => catalog.bumpVersion(spec.database, spec.name), mark, known)(stage)
 
   /** Per-phase wall clock under GRAFT_FLUSH_DEBUG: each `mark(phase)`
     * prints the time since the previous mark. */
@@ -388,9 +390,6 @@ object ParquetStats {
       minTime = stats.minTime, maxTime = stats.maxTime,
       dataMinTime = dmin, dataMaxTime = dmax)
   }
-
-  def manifestEntry(spark: SparkSession, uri: String, name: String): FileEntry =
-    manifestEntry(spark.sparkContext.hadoopConfiguration, uri, name)
 
   /** Threshold below which footer stats are read inline on the driver:
     * a small stream micro-batch (or a spec's DataFrame) publishes 1-2

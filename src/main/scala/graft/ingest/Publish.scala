@@ -9,20 +9,18 @@ import graft.catalog.TableSpec
 import graft.index.{FileEntry, MetadataIndex}
 import graft.sources.ObjectStore
 
-/** The one commit protocol for every file a manifest lists. The buffered
-  * flush and the firehose write (IngestWriter) and the compactor's merge
-  * (Compactor.executePlan) each only stage their parquet; publish and
-  * the manifest commit happen here, so a flush and a merge become
-  * visible the same way. As in the reference, the bytes go to their
-  * final name or object key first (save_service_s3.go:55-88,
-  * merge_service_s3.go:73-144), then one manifest batch adds and removes
-  * entries (json_index.go:312-416). */
+/** The one commit protocol for every file a manifest lists: [[staged]]. */
 object Publish {
 
   /** Run `stage` into a fresh `{tableDir}/tmp/{uuid}` staging dir, then
-    * publish every parquet file it staged and commit the manifests.
-    * A file staged under `date=…/hour=…` (relative to the staging dir)
-    * lands in that partition dir of the table.
+    * publish every parquet file it staged and commit the manifests, so a
+    * flush and a merge become visible the same way: as in the reference,
+    * the bytes go to their final name or object key first
+    * (save_service_s3.go:55-88, merge_service_s3.go:73-144), then one
+    * manifest batch per partition dir adds and removes entries
+    * (json_index.go:312-416). A file staged under `date=…/hour=…`
+    * (relative to the staging dir) lands in that partition dir of the
+    * table.
     *
     * Local tables: atomic move. Object-store tables (spec.dataUrl): the
     * bytes are copied to their FINAL key and the metadata.json manifest
@@ -35,12 +33,15 @@ object Publish {
     * published name (else `{uuid}.1.parquet`) and the entries it
     * replaces in its partition's manifest (a merge's sources).
     * `mark` times the encode, stats, publish and commit phases.
+    * `onCommit` runs once when any manifest commit landed, even if a
+    * later one failed; callers bump the table's catalog version there,
+    * so cached query views re-list before a gc deletes what a merge
+    * removed.
     *
     * A failure before the commit deletes what was published; after a
     * commit, a failed staging cleanup is only logged: the rows are
-    * already visible. Returns the published URIs; the caller then bumps
-    * the table's catalog version so cached query views re-list. */
-  def staged(spark: SparkSession, spec: TableSpec, tableDir: Path,
+    * already visible. Returns the published URIs. */
+  def staged(spark: SparkSession, spec: TableSpec, tableDir: Path, onCommit: () => Unit,
              mark: String => Unit = _ => (), known: Option[ParquetStats.Stats] = None,
              name: Option[String] = None, remove: Seq[String] = Nil)
             (stage: HPath => Unit): Seq[String] = {
@@ -125,6 +126,7 @@ object Publish {
         }
         throw e
     } finally {
+      if (committed) onCommit()
       // a failed write must not leak partial parquet at a 1 s flush
       // cadence; but a committed write must not turn into a failure
       // here: the client would get an error for rows it can already

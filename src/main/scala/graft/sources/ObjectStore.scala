@@ -23,8 +23,7 @@ import org.apache.spark.sql.SparkSession
   * (merge_service_s3.go:125-143 deletes post-upload; we add the FS
   * path's 30 s grace, which S3 needs even more). `file://` URLs run the
   * exact same copy-publish path — that is what the spec exercises
-  * hermetically. graft.ingest.Publish runs this protocol for the flush,
-  * the firehose write and the merge alike.
+  * hermetically. [[graft.ingest.Publish.staged]] runs this protocol.
   */
 object ObjectStore {
 
@@ -197,9 +196,6 @@ object ObjectStore {
 
   def exists(spark: SparkSession, uri: String): Boolean =
     fs(spark, uri).exists(new HPath(uri))
-
-  def sizeOf(spark: SparkSession, uri: String): Long =
-    fs(spark, uri).getFileStatus(new HPath(uri)).getLen
 
   /** Data root for a table spec, when it is object-store resident. */
   def tableRemoteRoot(spark: SparkSession, spec: graft.catalog.TableSpec): Option[String] =

@@ -217,27 +217,33 @@ class FlushWriteSpec extends SparkSpec {
     // a merge whose plan names a source that is gone fails in its read;
     // it stages and commits through the same step as the flush
     LineProtocolParser.parse("m v=1i 1700000000000000001").foreach(w.store)
+    // a commit bumps the table's version so cached query views re-list
+    assert(cat.version("default", "m") == 1)
     val (mSpec, mDir) = (cat.get("default", "m").get, cat.tableDir("default", "m"))
     val part = MetadataIndex.partitionDirs(mDir).head
     val sources = Compactor.filesToMerge(spark, mSpec, mDir, part, 1).map(_._1) :+
       part.resolve("gone.1.parquet").toString
-    Seq[(String, () => Any, String)](
+    Seq[(String, () => Any, String, Class[_ <: Exception])](
       ("bad", () => LineProtocolParser.parse("bad v=1i 1700000000000000001").foreach(w.store),
-        "nosuch"),
+        "nosuch", classOf[IllegalArgumentException]),
       ("m", () => Compactor.executePlan(spark, mSpec, mDir, part,
-        Compactor.Plan(sources, "merged.2.parquet", 1)), "gone.1.parquet")
-    ).foreach { case (table, fail, msg) =>
+        Compactor.Plan(sources, "merged.2.parquet", 1),
+        () => cat.bumpVersion("default", "m")), "gone.1.parquet",
+        classOf[org.apache.spark.sql.AnalysisException])
+    ).foreach { case (table, fail, msg, cls) =>
       val tableDir = root.resolve(s"default/$table")
       def parquet() = Files.walk(tableDir).iterator().asScala
         .filter(_.toString.endsWith(".parquet")).toSet
       def manifests() = MetadataIndex.partitionDirs(tableDir).map(MetadataIndex.load(_, table))
-      val (parquet0, manifests0) = (parquet(), manifests())
+      val (parquet0, manifests0, v0) = (parquet(), manifests(), cat.version("default", table))
       val e = intercept[Exception](fail())
+      assert(cls.isInstance(e), e)
       assert(e.getMessage.contains(msg), e.getMessage)
       val tmp = tableDir.resolve("tmp")
       assert(!Files.exists(tmp) || Files.list(tmp).count() == 0, table)
       assert(parquet() == parquet0, table)
       assert(manifests() == manifests0, table)
+      assert(cat.version("default", table) == v0, table)
     }
   }
 
@@ -276,7 +282,8 @@ class FlushWriteSpec extends SparkSpec {
       val file = java.nio.file.Paths.get(uris.head)
       val name = file.getFileName.toString
       val written = graft.index.MetadataIndex.load(file.getParent, table).entries(name)
-      val footer = ParquetStats.manifestEntry(spark, uris.head, name)
+      val footer = ParquetStats.manifestEntry(
+        spark.sparkContext.hadoopConfiguration, uris.head, name)
       assert(written.copy(id = 0) == footer, s"$table round $round")
       assert(written.rowCount == n && written.dataMinTime == lines.map(_.timeNs).min &&
         written.dataMaxTime == lines.map(_.timeNs).max)
